@@ -636,16 +636,7 @@ object Bench {
     * mode (emitTotal=false, single query) prints a per-query result line;
     * in inproc mode prints the aggregate line. */
   private def runInProc(names: Seq[String], emitTotal: Boolean): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.registerAll(spark)
+    val spark = Graft.localSession("graft-bench", cpus.toInt, cpus.toInt)
     // FAST mode (parent deadline fallback): one timed run per query,
     // no untimed warmup — 3× fewer executions. The observation includes
     // codegen/JIT, i.e. an honest overestimate of steady-state cost.
@@ -780,21 +771,30 @@ object Bench {
     else {
       def header(i: Int, n: Int): String =
         s"""{"metric":"per_query_part","i":$i,"n":$n,"unit":"sec","sf":"$sfBase","queries":{"""
-      // worst-case header width (2-digit i/n) + closing "}}"
-      val overhead = header(99, 99).length + 2
       val entries = results.sortBy { case (n, v) => (v, n) }
         .map { case (n, v) => s"${jstr(n)}:${fmt3(v)}" }
-      val groups = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer[String]())
-      var len = overhead
-      entries.foreach { e =>
-        if (groups.last.nonEmpty && len + e.length + 1 > limit) {
-          groups += scala.collection.mutable.ArrayBuffer[String]()
-          len = overhead
+      // packs the entries assuming i/n are at most `digits` wide
+      def pack(digits: Int) = {
+        // worst-case header width + closing "}}"
+        val overhead = header(0, 0).length + 2 * (digits - 1) + 2
+        val groups = scala.collection.mutable.ArrayBuffer(
+          scala.collection.mutable.ArrayBuffer[String]())
+        var len = overhead
+        entries.foreach { e =>
+          if (groups.last.nonEmpty && len + e.length + 1 > limit) {
+            groups += scala.collection.mutable.ArrayBuffer[String]()
+            len = overhead
+          }
+          groups.last += e
+          len += e.length + 1
         }
-        groups.last += e
-        len += e.length + 1
+        groups
       }
+      // widen until the real chunk count fits the assumed width (i < n)
+      val groups = Iterator.from(1)
+        .map(d => (d, pack(d))).collectFirst {
+          case (d, g) if g.size.toString.length <= d => g
+        }.get
       groups.zipWithIndex.map { case (g, i) =>
         header(i, groups.size) + g.mkString(",") + "}}"
       }.toSeq

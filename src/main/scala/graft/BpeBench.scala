@@ -22,7 +22,6 @@ object BpeBench {
     val sfDir = args.headOption.getOrElse(TestData.dir("0.1"))
     val rounds = args.drop(1).headOption.map(_.toInt).getOrElse(1000)
     val batchK = args.drop(2).headOption.map(_.toInt).getOrElse(32)
-    val trainer = args.drop(3).headOption.getOrElse("batched")
     val spark = Graft.localSession("bpe-bench")
     val jobs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -30,7 +29,7 @@ object BpeBench {
         jobs.incrementAndGet()
     })
     // `synth:N` — an N-word synthetic vocabulary (md5-hex words), the
-    // big-vocab regime where the full-recount-vs-delta trade flips
+    // big-vocab regime where per-round full-vocab recounts dominate
     val docs =
       if (sfDir.startsWith("synth:"))
         spark.range(sfDir.stripPrefix("synth:").toLong)
@@ -39,16 +38,12 @@ object BpeBench {
       else SparkEntry.tbl(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
     val t0 = System.nanoTime()
-    val merges = (trainer match {
-      case "delta" =>
-        graft.operators.Bpe.trainMergesDelta(docs, "text", rounds, batchK)
-      case _ =>
-        graft.operators.Bpe.trainMergesBatched(docs, "text", rounds, batchK)
-    }).collect()
+    val merges = graft.operators.Bpe
+      .trainMergesBatched(docs, "text", rounds, batchK).collect()
     val sec = (System.nanoTime() - t0) / 1e9
     org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
     val nJobs = jobs.get()
-    println(f"""{"metric":"bpe_build","trainer":"$trainer","rounds":$rounds,"batchK":$batchK,"merges":${merges.length},"jobs":$nJobs,"sec":$sec%.1f,"merges_per_trip":${merges.length.toDouble / math.max(1, nJobs)}%.2f}""")
+    println(f"""{"metric":"bpe_build","rounds":$rounds,"batchK":$batchK,"merges":${merges.length},"jobs":$nJobs,"sec":$sec%.1f,"merges_per_trip":${merges.length.toDouble / math.max(1, nJobs)}%.2f}""")
     spark.stop()
   }
 }

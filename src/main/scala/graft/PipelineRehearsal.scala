@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{QualityRules, Text}
+import graft.functions.Text
 import graft.operators.{Decontaminate, Dedup, Split}
 
 /** Composed-pipeline rehearsal — the measurement the per-operator
@@ -93,33 +93,15 @@ object PipelineRehearsal {
     // The binding gate is the quality score (>= 0.6 cuts inside the
     // corpus's score distribution, so it fires visibly and keeps a
     // scale-proportional survivor set).
-    // SPARK_GRAFT_GATE=composed selects the pre-round-13 composable
-    // gate (the ~16-regex-pass form) for A/B measurement; the default
-    // is the fused one-scan GateMetrics profile — spec-pinned
-    // bit-identical output (GateFusedSpec), so every downstream stage
-    // row count is unchanged by construction.
-    val gateForm = sys.env.getOrElse("SPARK_GRAFT_GATE", "fused")
+    // The fused one-scan GateMetrics profile is spec-pinned bit-identical
+    // to the composable gate (GateFusedSpec).
     val gated = stage("gate") {
       val docs = SparkEntry.tbl(spark, sfDir, "documents")
         .select(col("doc_id"), col("source"), col("lang"),
           call_function("nfc_normalize", col("text")).as("text"))
-      val profiled =
-        if (gateForm == "composed") {
-          val scored = docs.select(col("*"),
-            Text.qualityScore(col("text")).as("quality"),
-            Text.langId(col("text")).as("lang_pred"),
-            Text.tokenCount(col("text")).cast("long").as("n_tokens"))
-          val flagged = scored.select(col("*") +: QualityRules.flags(col("text"),
-            minWords = 10, minRequiredWords = 0): _*)
-          Text.withScriptProfile(flagged, col("text"))
-            .where(!Text.scriptMixed(Text.scriptCountCols,
-              Text.scriptCountCols.reduce(_ + _)))
-        } else {
-          Text.withGateProfile(docs, col("text"),
-              minWords = 10, minRequiredWords = 0)
-            .where(!col("script_mixed"))
-        }
-      profiled
+      Text.withGateProfile(docs, col("text"),
+          minWords = 10, minRequiredWords = 0)
+        .where(!col("script_mixed"))
         .where(col("quality") >= 0.6 && col("passes_quality"))
         .select(col("doc_id"), col("source"), col("lang"), col("text"),
           col("quality"), col("n_tokens"))

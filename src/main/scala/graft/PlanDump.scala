@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement-only tool: writes `.explain("formatted")` for named
   * declared queries to `<outDir>/<name>_<tag>.txt` — the plan-shape
   * evidence the optimization rounds commit under `plans/rNN/`.
@@ -16,17 +14,8 @@ object PlanDump {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.registerAll(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.localSession("graft-plan-dump", cpus, cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement-only harness (optimization guide §1): runs named declared
   * queries in one warm JVM and reports, per timed run, the wall seconds
@@ -19,23 +18,14 @@ object ProfileJobs {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.localSession("graft-profile-jobs", cpus, cpus)
     // extra session confs for experiments, e.g.
-    // SPARK_GRAFT_CONF="spark.sql.autoBroadcastJoinThreshold=-1;spark.graft.staticLayout=pinned"
+    // SPARK_GRAFT_CONF="spark.sql.autoBroadcastJoinThreshold=-1"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)
     })
-    Graft.registerAll(spark)
     val jobs = new AtomicInteger()
     val stages = new AtomicInteger()
     val tasks = new AtomicLong()

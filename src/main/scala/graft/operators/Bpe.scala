@@ -196,74 +196,6 @@ object Bpe {
     picked.toSeq
   }
 
-  /** [[trainMergesBatched]] with the classic PAIR-COUNT DELTA UPDATE —
-    * same output (the shared [[safePrefix]] selection over the same
-    * ranked head; equality-tested against sequential greedy), different
-    * per-round cost envelope: the pair-count table is MAINTAINED
-    * incrementally instead of recounted from the whole vocab table
-    * every round.
-    *
-    * The classic observation (every fast BPE implementation): a merge
-    * changes the counts of exactly the pairs adjacent to one of its
-    * occurrences — everything else is untouched. Distributed form: the
-    * rows containing the batch's patterns are recounted TWICE (pairs
-    * before the rewrite, negated; pairs after, positive) and the delta
-    * is folded into the standing pair table — so each round's
-    * aggregation is sized by the words that actually contain the
-    * merged pairs (a vanishing fraction once training passes the
-    * high-frequency head), not by the vocabulary. The winner lookup
-    * also moves off the vocab table onto the standing pair table
-    * (|distinct pairs| rows — far smaller than the symbol strings).
-    *
-    * At sampled-model-build sizes (the [[trainMerges]] contract) the
-    * fixed per-round job overhead dominates either way; the delta form
-    * is the 100 TB-shape answer for when the vocab table is NOT small
-    * — full-vocab recounts per round are the one piece of the batched
-    * trainer that scales with corpus vocabulary rather than with the
-    * merge's own footprint. Measured: SCALE.md round 13. */
-  def trainMergesDelta(
-      docs: DataFrame, textCol: String, rounds: Int,
-      batchK: Int = 8): DataFrame = {
-    require(batchK >= 1, s"batchK must be positive, got $batchK")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var words = wordCounts(docs, textCol)
-      .select(col("cnt"), charString(col("word")).as("s"))
-      .localCheckpoint()
-    // the standing pair-count table: built ONCE from the vocab, then
-    // maintained by deltas
-    var pc = pairCounts(words).localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val top = pc.orderBy(col("n").desc, col("l"), col("r"))
-        .limit(batchK * 4).collect()
-        .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
-      if (top.isEmpty) exhausted = true
-      else {
-        val picked = safePrefix(top, batchK, rounds - r + 1)
-        for ((l, rr, n) <- picked) { merges += ((r, l, rr, n)); r += 1 }
-        // only rows containing a picked pattern change counts
-        val hit = picked.map { case (l, rr, _) =>
-          col("s").contains(s" $l $rr ") }.reduce(_ || _)
-        val changed = words.where(hit)
-        val rewrite = (c: Column) => picked.foldLeft(c) {
-          case (cc, (l, rr, _)) =>
-            replace(cc, lit(s" $l $rr "), lit(s" $l$rr ")) }
-        val delta = pairCounts(changed.withColumn("s", rewrite(col("s"))))
-          .unionByName(pairCounts(changed)
-            .select(col("l"), col("r"), (-col("n")).as("n")))
-        pc = pc.unionByName(delta)
-          .groupBy(col("l"), col("r")).agg(sum(col("n")).as("n"))
-          .where(col("n") > 0)
-          .localCheckpoint()
-        words = words.withColumn("s", rewrite(col("s"))).localCheckpoint()
-      }
-    }
-    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
-  }
-
   /** Applies a learned merge list to the corpus and reports per-document
     * subword statistics: (id, n_tokens, n_symbols) — the "how many BPE
     * tokens is this document" accounting every token-budgeted pipeline

@@ -65,11 +65,9 @@ object Graph {
     // exchange reuse never crosses job boundaries
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
       col(weightCol).cast("long").as("_w")).localCheckpoint()
-    // static per-iteration join side, keyed on _src every round — layout
-    // decided by StaticLayout.static (checkpoint locally, pinned at scale)
-    val eo = StaticLayout.static(
-      e.join(e.groupBy(col("_src")).agg(sum(col("_w")).as("_tw")), Seq("_src")),
-      col("_src"))
+    // static per-iteration join side, materialized once
+    val eo = e.join(e.groupBy(col("_src")).agg(sum(col("_w")).as("_tw")), Seq("_src"))
+      .localCheckpoint()
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()
     val n = nodes.count() // one tiny job; |V| is known anyway at this point
@@ -217,11 +215,10 @@ object Graph {
         col(weightCol).cast("long").as("_w"))
       .where(col("_u") =!= col("_v"))
       .groupBy(col("_u"), col("_v")).agg(sum(col("_w")).as("_w"))
-    // static per-iteration join side, keyed on _nbr every round
-    val nb = StaticLayout.static(
-      und.select(col("_u").as("_n"), col("_v").as("_nbr"), col("_w"))
-        .unionByName(und.select(col("_v").as("_n"), col("_u").as("_nbr"), col("_w"))),
-      col("_nbr"))
+    // static per-iteration join side, materialized once
+    val nb = und.select(col("_u").as("_n"), col("_v").as("_nbr"), col("_w"))
+      .unionByName(und.select(col("_v").as("_n"), col("_u").as("_nbr"), col("_w")))
+      .localCheckpoint()
     // every node in nb has >= 1 neighbor by construction (isolated nodes
     // have no edges and no label), so the update covers all nodes
     var labels = nb.select(col("_n")).distinct()
@@ -397,11 +394,10 @@ object Graph {
       .where(col("_u") =!= col("_v"))
       .distinct()
       .localCheckpoint()
-    // static per-iteration join side, keyed on _n (joined as _node)
-    val nb = StaticLayout.static(
-      und.select(col("_u").as("_n"), col("_v").as("_nbr"))
-        .union(und.select(col("_v").as("_n"), col("_u").as("_nbr"))),
-      col("_n"))
+    // static per-iteration join side, materialized once
+    val nb = und.select(col("_u").as("_n"), col("_v").as("_nbr"))
+      .union(und.select(col("_v").as("_n"), col("_u").as("_nbr")))
+      .localCheckpoint()
     var dist = nb.select(col("_n").as("_src")).distinct()
       .select(col("_src"), col("_src").as("_node"), lit(0L).as("_h"))
       .localCheckpoint()
@@ -642,15 +638,11 @@ object Graph {
       weightCol: String = "w", iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     def dec(c: Column) = c.cast("decimal(38,0)")
-    // static per-iteration join side; each HITS round joins it on _src
-    // (hub step) AND _dst (authority step) — the pinned layout keys on
-    // _src, so at scale the authority step still exchanges it once per
-    // round (a second _dst-pinned copy is the full fix; one copy
-    // already halves the per-round static exchanges)
-    val e = StaticLayout.static(
-      edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
-        col(weightCol).cast("long").as("_w")),
-      col("_src"))
+    // static per-iteration join side, materialized once; each HITS
+    // round joins it on _src (hub step) and _dst (authority step)
+    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
+        col(weightCol).cast("long").as("_w"))
+      .localCheckpoint()
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()
     def ppmByMax(scored: DataFrame, c: String): DataFrame = {

@@ -173,6 +173,15 @@ class BenchEmitSpec extends AnyFunSuite {
     // heaviest queries ride the LAST chunk (tail-capture hedge)
     assert(lines.last.contains(""""q257_synthetic_name_257":"""))
     assert(lines.head.contains(""""q1_synthetic_name_001":"""))
+    // 100+ chunks: the header's i/n grow to three digits and every
+    // chunk must still fit, whatever the slack left under the limit
+    (140 to 170).foreach { limit =>
+      val many = Bench.perQueryPartLines(rs, "sf0.1", limit)
+      assert(many.size >= 100, s"limit $limit: ${many.size} chunks")
+      many.foreach(l => assert(l.length <= limit, s"limit $limit, len ${l.length}: $l"))
+      assert(many.last.startsWith(
+        s"""{"metric":"per_query_part","i":${many.size - 1},"n":${many.size},"""))
+    }
   }
 
   test("per_query_part chunks are valid one-line JSON at any size") {

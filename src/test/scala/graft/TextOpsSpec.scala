@@ -228,38 +228,7 @@ class TextOpsSpec extends AnyFunSuite {
         .collect().map(r =>
           (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       assert(batM === seqM, s"round=$round batchK=$k rounds=$rounds")
-      // the delta trainer maintains pair counts incrementally — it must
-      // walk the same ranked heads, so equality here pins BOTH the
-      // shared safe-prefix rule and the delta bookkeeping
-      val delM = graft.operators.Bpe
-        .trainMergesDelta(docs, "text", rounds, batchK = k)
-        .collect().map(r =>
-          (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      assert(delM === seqM, s"delta round=$round batchK=$k rounds=$rounds")
     }
-  }
-
-  test("bpe delta training equals sequential greedy on the corpus slice") {
-    import spark.implicits._
-    val docs = SparkEntry.tbl(spark, TestData.dir("0.001"), "documents")
-      .where(col("doc_id") < 120).select(col("doc_id"), col("text"))
-    val seqM = graft.operators.Bpe.trainMerges(docs, "text", rounds = 16)
-      .collect().map(r =>
-        (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    for (k <- Seq(1, 8)) {
-      val delM = graft.operators.Bpe
-        .trainMergesDelta(docs, "text", rounds = 16, batchK = k)
-        .collect().map(r =>
-          (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      assert(delM === seqM, s"delta batchK=$k diverged from sequential")
-    }
-    // exhaustion through the delta path: the standing table drains to
-    // empty exactly when no pair is left
-    val m2 = graft.operators.Bpe
-      .trainMergesDelta(Seq((1L, "aaa")).toDF("doc_id", "text"),
-        "text", rounds = 9, batchK = 4)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-    assert(m2.toSeq === Seq((1, "a", "a", 2L), (2, "aa", "a", 1L)))
   }
 
   test("lexical diversity: hand-computed types/hapax/ttr, case folding, empty docs drop") {
