@@ -4,8 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{Fingerprint64, HashedLinearScore, HashedShingles, LongArrayDot, MinhashSig, NfcNormalize, PositionalGramHashes, StripAccents, Simhash32, SqlFunctions}
-import graft.operators.Retention
+import graft.functions.{FunctionTable, SqlFunction}
 
 /** Session facade for the graft engine — the analogue of the reference's
   * `SessionContext` setup + `register_udaf` calls
@@ -36,20 +35,14 @@ object Graft {
     spark
   }
 
-  /** Registers every SQL-callable function the library provides. */
-  def registerAll(spark: SparkSession): Unit = {
-    Retention.register(spark)
-    LongArrayDot.register(spark)
-    MinhashSig.register(spark)
-    HashedShingles.register(spark)
-    PositionalGramHashes.register(spark)
-    Simhash32.register(spark)
-    Fingerprint64.register(spark)
-    HashedLinearScore.register(spark)
-    NfcNormalize.register(spark)
-    StripAccents.register(spark)
-    SqlFunctions.registerAll(spark)
-  }
+  /** Registers every SQL-callable function the library provides
+    * ([[graft.functions.FunctionTable]]) in the session's function
+    * registry — the analogue of the reference's `ctx.register_udaf`
+    * (examples/retention.rs:19-20). */
+  def registerAll(spark: SparkSession): Unit =
+    FunctionTable.all.foreach(f =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        f.name, f.builder, "scala_udf"))
 
   /** Applies S3A object-store configuration to the session's Hadoop conf —
     * the Spark analogue of the reference's `register_object_store` +
@@ -77,57 +70,13 @@ object Graft {
 }
 
 /** Config-based injection: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * makes the library's native expressions available in every session of a
-  * cluster without code changes (the deployment-style analogue of
-  * [[Graft.registerAll]]; the Aggregator-based UDAFs still need the
-  * session-level `registerAll` because `functions.udaf` registration is
-  * per-session by design).
+  * makes every function of [[graft.functions.FunctionTable]] available in
+  * every session of a cluster without code changes (the deployment-style
+  * analogue of [[Graft.registerAll]], with the same builders and checks).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier(LongArrayDot.name),
-      new ExpressionInfo(classOf[graft.functions.LongArrayDot].getName, LongArrayDot.name),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.LongArrayDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier(MinhashSig.name),
-      new ExpressionInfo(classOf[graft.functions.MinhashSig].getName, MinhashSig.name),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.MinhashSig(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier(HashedShingles.name),
-      new ExpressionInfo(classOf[graft.functions.HashedShingles].getName, HashedShingles.name),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.HashedShingles(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier(PositionalGramHashes.name),
-      new ExpressionInfo(classOf[graft.functions.PositionalGramHashes].getName,
-        PositionalGramHashes.name),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.PositionalGramHashes(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier(Simhash32.name),
-      new ExpressionInfo(classOf[graft.functions.Simhash32].getName, Simhash32.name),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Simhash32(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier(Fingerprint64.name),
-      new ExpressionInfo(classOf[graft.functions.Fingerprint64].getName, Fingerprint64.name),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Fingerprint64(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue())))
-    // the composed text/PII scalar surface (same builders as the
-    // session-level SqlFunctions.registerAll)
-    graft.functions.SqlFunctions.all.foreach { case (name, arity, f) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.SqlFunctions", name),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.functions.SqlFunctions.builder(name, arity, f)(exprs)))
-    }
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    FunctionTable.all.foreach(f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[SqlFunction].getName, f.name), f.builder)))
 }

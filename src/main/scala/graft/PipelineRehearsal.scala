@@ -98,7 +98,7 @@ object PipelineRehearsal {
     val gated = stage("gate") {
       val docs = SparkEntry.tbl(spark, sfDir, "documents")
         .select(col("doc_id"), col("source"), col("lang"),
-          call_function("nfc_normalize", col("text")).as("text"))
+          graft.functions.NfcNormalize(col("text")).as("text"))
       Text.withGateProfile(docs, col("text"),
           minWords = 10, minRequiredWords = 0)
         .where(!col("script_mixed"))

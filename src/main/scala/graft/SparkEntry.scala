@@ -932,7 +932,6 @@ object SparkEntry {
          |FROM cells c JOIN tot t USING (lang_label)""".stripMargin
     },
     query("t4_fingerprint")((s, dir) => {
-      Graft.registerAll(s) // fingerprint64 codegen expression
       par(tbl(s, dir, "documents")).select(
         col("doc_id"),
         Text.docHash(col("text")).as("doc_hash"),
@@ -1227,7 +1226,6 @@ object SparkEntry {
     // 512-token window) — one global aggregate, exact percentile
     // (quantile_cont parity), ppm by DECIMAL floor division.
     query("t39_length_profile")((s, dir) => {
-      Graft.registerAll(s)
       par(tbl(s, dir, "documents"))
         .select(length(col("text")).cast("long").as("_c"),
           Text.tokenCount(col("text")).cast("long").as("_t"))
@@ -1497,7 +1495,6 @@ object SparkEntry {
     // shuffle-hash join back + doc agg — never broadcasts the
     // vocabulary-sized df table.
     query("t10_boilerplate")((s, dir) => {
-      Graft.registerAll(s)
       Repetition.boilerplateCoverage(par(tbl(s, dir, "documents")), n = 3, minDf = 3)
     }) {
       s"""WITH norm AS (
@@ -1546,7 +1543,6 @@ object SparkEntry {
     // MinHash+LSH near-dup pairs over a corpus with constructed near-dups
     // (each doc unioned with a truncated copy), verified by exact Jaccard.
     query("d2_minhash_lsh")((s, dir) => {
-      Graft.registerAll(s) // minhash_sig codegen expression
       Dedup.minhashLshPairs(augmentedDocs(s, dir), k = 32, bands = 8, threshold = 0.4)
     }) {
       d2PairsSql
@@ -1556,7 +1552,6 @@ object SparkEntry {
     // and max absolute error — the sketch-eval sibling of s12's recall
     // report (see Dedup.minhashErrorAudit).
     query("d17_minhash_error")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.minhashErrorAudit(augmentedDocs(s, dir))
     }) {
       s"""WITH $augDocsSql, $minhashParamsSql, ${lshSideSql("aug", "")}, cand AS (
@@ -1589,7 +1584,6 @@ object SparkEntry {
     // first-class oracle-checked artifact. Deliberately tight caps
     // (4 / 8) so BOTH stages exercise their hot branch on testdata.
     query("d20_cap_audit")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.capExposureReport(augmentedDocs(s, dir), bucketCap = 4, dfCap = 8)
     }) {
       s"""WITH $augDocsSql, $minhashParamsSql, ${lshSideSql("aug", "")}, bsz AS (
@@ -1633,7 +1627,6 @@ object SparkEntry {
     // occupancy failure class the round-6 scale rehearsal caught.
     // max_group near the cap = time to add planes.
     query("d21_emb_cap_audit")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.embeddingCapExposureReport(augmentedEmb(s, dir), bucketCap = 4)
     }) {
       // 35/16 hardcoded = bandingForTargetMiss(0.95, 1e-3), the grid the
@@ -1669,7 +1662,6 @@ object SparkEntry {
     // shingles are near-unique (max df 6, 646 candidates). See
     // Dedup.idfCosinePairs.
     query("d23_idf_cosine")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.idfCosinePairs(augmentedDocs(s, dir), n = 5, threshold = 0.8)
     }) {
       s"""WITH ${augShinglesSql(5)}, ex AS (
@@ -1703,7 +1695,6 @@ object SparkEntry {
     // truth, so the hash gate doubles as the losslessness proof. The
     // deterministic exact-join complement to d2's probabilistic LSH.
     query("d22_prefix_filter")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.prefixFilterJaccardPairs(augmentedDocs(s, dir), n = 5, threshold = 0.6)
     }) {
       s"""WITH ${augShinglesSql(5)}, ex AS (
@@ -1720,7 +1711,6 @@ object SparkEntry {
     },
     // Per-document 32-bit SimHash.
     query("d3_simhash")((s, dir) => {
-      Graft.registerAll(s) // simhash32 codegen expression
       par(tbl(s, dir, "documents"))
         .select(col("doc_id"), Dedup.simhash32Native(col("text")).as("simhash"))
     }) {
@@ -1739,7 +1729,6 @@ object SparkEntry {
     // inverted-index join quadratically; 5-grams keep shingles near-unique
     // so join fan-out ≈ true near-dup pairs.
     query("d4_ngram_jaccard")((s, dir) => {
-      Graft.registerAll(s) // hashed_shingles codegen expression
       Dedup.ngramJaccardPairs(augmentedDocs(s, dir), n = 5, threshold = 0.3)
     }) {
       s"""WITH ${augShinglesSql(5)}, ex AS (
@@ -1764,7 +1753,6 @@ object SparkEntry {
     // deep grid stays linear; sketch compute grows 8.75× but is
     // scan-stage and codegen'd.
     query("d5_embedding_neardup")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.embeddingNearDupPairsAuto(augmentedEmb(s, dir), threshold = 0.95)
     }) {
       s"""WITH eIn AS (
@@ -1779,7 +1767,6 @@ object SparkEntry {
     // ── Similarity search ────────────────────────────────────────────────
     // Brute-force cosine top-5 for the first 20 vectors as queries.
     query("s1_ann_topk")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.bruteForceTopK(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5)
@@ -1797,7 +1784,6 @@ object SparkEntry {
     // contribute 0 — the rank-weighted companion to s12's recall.
     // Rides bruteForceTopK (corpus never shuffled, queries broadcast).
     query("s20_mrr")((s, dir) => {
-      Graft.registerAll(s)
       val emb = augmentedEmb(s, dir)
       val top = Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 10)
@@ -1834,7 +1820,6 @@ object SparkEntry {
     // primitive. Corpus scanned never shuffled, queries broadcast.
     // See Similarity.rangeSearch.
     query("s19_range_search")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.rangeSearch(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", threshold = 0.3)
@@ -1854,7 +1839,6 @@ object SparkEntry {
     // rule, polarity inverted), corpus never shuffled. See
     // Similarity.hardNegatives.
     query("s18_hard_negatives")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.hardNegatives(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", "label", k = 5)
@@ -1878,7 +1862,6 @@ object SparkEntry {
     // after ANN, here with a bit-identical oracle-unrollable
     // trajectory. See Similarity.mmrRerank.
     query("s17_mmr_rerank")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.mmrRerank(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", m = 10, k = 5, lambdaPct = 70)
@@ -1946,7 +1929,6 @@ object SparkEntry {
     // buckets are populated; at production scale use 16+ planes and
     // multi-probe.
     query("s2_ann_lsh")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.lshTopK(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5, planes = 6)
@@ -1973,7 +1955,6 @@ object SparkEntry {
     // probes every Hamming-1 bucket (one flipped sign bit), recovering
     // neighbors that fell one hyperplane to the wrong side.
     query("s4_ann_multiprobe")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.lshTopKMultiProbe(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5, planes = 6)
@@ -2006,7 +1987,6 @@ object SparkEntry {
     // IVF variant: label column as the coarse quantizer cells; queries
     // probe their 2 nearest integer centroids.
     query("s3_ann_ivf")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.ivfTopK(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", "label", k = 5, nprobe = 2)
@@ -2040,7 +2020,6 @@ object SparkEntry {
     // its assignment feeds the probe path — train → assign → ivfTopK
     // with no external model or label column.
     query("s5_ann_ivf_trained")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       // train-and-probe in one pass: one corpus prepare, the trainer's
       // own final centers reused by the probe (identical assignments,
@@ -2082,7 +2061,6 @@ object SparkEntry {
     // replays the identical candidate set), then an exact-cosine rerank
     // of each query's top 20.
     query("s6_ann_sq8")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.sq8TopK(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5, rerank = 20)
@@ -2126,7 +2104,6 @@ object SparkEntry {
     // path of the quantization family (s1 brute → s2/s4 LSH → s3/s5
     // IVF → s6 SQ8 → s8 PQ).
     query("s8_ann_pq")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.pqTopK(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5,
@@ -2221,7 +2198,6 @@ object SparkEntry {
     // + mean exact-integer squared distance to the member-mean centroid
     // — the cell-balance pre-flight before committing a layout.
     query("s10_cell_profile")((s, dir) => {
-      Graft.registerAll(s)
       Similarity.cellProfile(par(tbl(s, dir, "embeddings")),
         "vec_id", "embedding", k = 8, iters = 2)
     }) {
@@ -2247,7 +2223,6 @@ object SparkEntry {
     // exact rerank finishes. At scale the corpus is hash-partitioned by
     // cell, so a probe reads ~nprobe/kCells of the codes.
     query("s9_ann_ivfpq")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.ivfPqTopK(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", k = 5,
@@ -2362,7 +2337,6 @@ object SparkEntry {
     // "is this ANN index good enough to ship" report, computed
     // distributed without materializing either side.
     query("s12_recall_report")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       val q = e.where(col("vec_id") < 20)
       val exact = Similarity.bruteForceTopK(par(e), q, "vec_id", "embedding", k = 5)
@@ -2411,7 +2385,6 @@ object SparkEntry {
     // pairs whose cosine clears the runner-up by ≥ 0.01. See
     // Similarity.bitextMarginPairs for the scale shape.
     query("s11_bitext_margin")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.bitextMarginPairs(
         par(e.where(col("vec_id") % 2 === 1)),
@@ -3106,7 +3079,6 @@ object SparkEntry {
     // Dedup groups: connected components over the d2 near-dup pairs —
     // pairwise matches become keeper groups (min id per component).
     query("d6_dedup_groups")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.connectedComponents(
         Dedup.minhashLshPairs(augmentedDocs(s, dir), k = 32, bands = 8, threshold = 0.4))
     }) {
@@ -3121,7 +3093,6 @@ object SparkEntry {
     // a giant component is the signature of boilerplate gluing
     // unrelated docs together. Two tiny rollups over the CC output.
     query("d24_cluster_sizes")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.connectedComponents(
         Dedup.minhashLshPairs(augmentedDocs(s, dir), k = 32, bands = 8, threshold = 0.4))
         .groupBy(col("group_id")).agg(count(lit(1)).as("cluster_size"))
@@ -3147,7 +3118,6 @@ object SparkEntry {
     // who-matches-whom), the property that distinguishes this from the
     // df²-bounded fingerprint joins.
     query("d28_dup_substrings")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents")).select(col("doc_id"), col("text"))
       val corpus = docs.unionAll(
         docs.where(col("doc_id") % 7 === 2)
@@ -3181,7 +3151,6 @@ object SparkEntry {
     // repeated passage survives, the Lee et al. "all but one"
     // semantics. Spans here are a strict subset of d28's.
     query("d29_dup_substrings_keepfirst")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents")).select(col("doc_id"), col("text"))
       val corpus = docs.unionAll(
         docs.where(col("doc_id") % 7 === 2)
@@ -3220,7 +3189,6 @@ object SparkEntry {
     // operator's span table joins back to a per-doc token count and
     // aggregates; everything after the span table is report-sized.
     query("d30_dup_substring_audit")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents"))
         .select(col("doc_id"), col("source"), col("text"))
       val removed = Dedup.duplicateSubstringSpans(docs, k = 8)
@@ -3278,7 +3246,6 @@ object SparkEntry {
     // excises every batch copy. Per-batch work: one batch-gram
     // shuffle + one equi-join against the never-broadcast index.
     query("d34_incr_dup_substrings")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents")).select(col("doc_id"), col("text"))
       val corpus = docs.where(col("doc_id") % 4 =!= 3)
       val batch = docs.where(col("doc_id") % 4 === 3)
@@ -3339,7 +3306,6 @@ object SparkEntry {
     // contaminated document survives as training data. Same d7 split;
     // k=4 matches d7's fixture width.
     query("d36_contamination_spans")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents")).select(col("doc_id"), col("text"))
       graft.operators.Decontaminate.contaminationSpans(
         docs.where(col("doc_id") % 20 =!= 0),
@@ -3376,7 +3342,6 @@ object SparkEntry {
     // (shuffle-hash — spans are corpus-bounded, never broadcast),
     // then one source-sized aggregate.
     query("d37_contamination_audit")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents"))
         .select(col("doc_id"), col("source"), col("text"))
       val train = docs.where(col("doc_id") % 20 =!= 0)
@@ -3441,7 +3406,6 @@ object SparkEntry {
     // the scan stage; only colliding doc ids reach the aggregate.
     // (Default width is 8; the short synthetic fixtures use 4.)
     query("d7_decontaminate")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents")).select(col("doc_id"), col("text"))
       Decontaminate.report(
         docs.where(col("doc_id") % 20 =!= 0),
@@ -3470,7 +3434,6 @@ object SparkEntry {
     // reportable" audit (d7 answers the train-side quarantine question).
     // Same split and shingle width as d7; clean items (0 ppm) reported.
     query("d27_eval_coverage")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents")).select(col("doc_id"), col("text"))
       Decontaminate.evalCoverage(
         docs.where(col("doc_id") % 20 =!= 0),
@@ -3505,7 +3468,6 @@ object SparkEntry {
     // table per task. Different split (%10) and width (5) than d7 so
     // the two queries exercise different collision patterns.
     query("d9_bloom_decontaminate")((s, dir) => {
-      Graft.registerAll(s)
       val docs = par(tbl(s, dir, "documents")).select(col("doc_id"), col("text"))
       Decontaminate.reportBloom(
         docs.where(col("doc_id") % 10 =!= 0),
@@ -3574,7 +3536,6 @@ object SparkEntry {
     // form of the d2+d6 pipeline — what a crawl-curation job actually
     // ships. Survivors keep their text length as the cheap payload proof.
     query("d10_corpus_dedup")((s, dir) => {
-      Graft.registerAll(s)
       val docs = augmentedDocs(s, dir)
       val labels = Dedup.connectedComponents(
         Dedup.minhashLshPairs(docs, k = 32, bands = 8, threshold = 0.4))
@@ -3599,7 +3560,6 @@ object SparkEntry {
     // with d10 (the original is both longer and lower-id); components
     // that merge DIFFERENT documents exercise the argmax for real.
     query("d15_keep_best")((s, dir) => {
-      Graft.registerAll(s)
       val docs = augmentedDocs(s, dir)
       val labels = Dedup.connectedComponents(
         Dedup.minhashLshPairs(docs, k = 32, bands = 8, threshold = 0.4))
@@ -3631,7 +3591,6 @@ object SparkEntry {
     // map-side-absorbed aggregate. (On production data `source` rides
     // the corpus row itself; the base-id join is this dataset's lookup.)
     query("d16_dup_stats")((s, dir) => {
-      Graft.registerAll(s)
       val docs = augmentedDocs(s, dir)
       val labels = Dedup.connectedComponents(
         Dedup.minhashLshPairs(docs, k = 32, bands = 8, threshold = 0.4))
@@ -3724,7 +3683,6 @@ object SparkEntry {
     // near-dup. Batch: the %5==0 docs plus trimmed near-copies of 50
     // corpus docs and 50 batch docs (both screens exercised).
     query("d11_incremental_neardup")((s, dir) => {
-      Graft.registerAll(s)
       val d = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
       val trim = expr("substring(text, 1, greatest(length(text) - 20, 1))")
       val corpus = par(d.where(col("doc_id") % 5 =!= 0))
@@ -3780,7 +3738,6 @@ object SparkEntry {
     // StreamingNearDup's rejections roll up to at release time. See
     // Dedup.incrementalNearDupVerdicts.
     query("d38_admission_audit")((s, dir) => {
-      Graft.registerAll(s)
       val d = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
       val trim = expr("substring(text, 1, greatest(length(text) - 20, 1))")
       val corpus = par(d.where(col("doc_id") % 5 =!= 0))
@@ -3860,7 +3817,6 @@ object SparkEntry {
     // is dropped. The oracle unrolls the same 2-iteration Lloyd's
     // training (as s5) and replays the in-cell keeper rule.
     query("d12_semdedup")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.semDedup(augmentedEmb(s, dir), k = 8, iters = 2, threshold = 0.95)
     }) {
       s"""WITH eIn AS (
@@ -3880,7 +3836,6 @@ object SparkEntry {
     // containment 1.0 against their sources while symmetric jaccard is
     // far below any dedup threshold — the case d4 structurally misses.
     query("d13_containment")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.containmentPairs(excerptDocs(s, dir), n = 5, threshold = 0.9)
     }) {
       s"""WITH exc AS (
@@ -3914,7 +3869,6 @@ object SparkEntry {
     // corpus, so the two source-lookup joins are cheap equi-joins on the
     // doc id; max is the order-independent score aggregate.
     query("d14_source_overlap")((s, dir) => {
-      Graft.registerAll(s)
       val pairs = Dedup.ngramJaccardPairs(augmentedDocs(s, dir), n = 5,
         threshold = 0.3)
       val src = tbl(s, dir, "documents").select(col("doc_id"), col("source"))
@@ -3997,7 +3951,6 @@ object SparkEntry {
     // assignSplit on the group. The component table is pair-bounded
     // (tiny next to the corpus), so the join back is cheap.
     query("p12_leakage_split")((s, dir) => {
-      Graft.registerAll(s)
       val aug = augmentedDocs(s, dir)
       val comp = Dedup.connectedComponents(
         Dedup.minhashLshPairs(aug, k = 32, bands = 8, threshold = 0.4))
@@ -4194,7 +4147,6 @@ object SparkEntry {
     // bounded k-per-group sampler — embedding-space coverage sampling
     // with ≤k rows per (partition, cell) crossing the shuffle.
     query("p8_cluster_sample")((s, dir) => {
-      Graft.registerAll(s)
       val cells = Similarity.trainIvfCells(par(tbl(s, dir, "embeddings")),
           "vec_id", "embedding", k = 8, iters = 2)
         .withColumnRenamed("_id", "vec_id").withColumnRenamed("_cell", "cell")
@@ -4691,7 +4643,6 @@ object SparkEntry {
     // report ("the top 2 deciles hold 70% of the good docs"). See
     // Profile.decileLift.
     query("t34_decile_lift")((s, dir) => {
-      Graft.registerAll(s)
       val scored = par(tbl(s, dir, "documents")).select(
         col("doc_id"),
         graft.functions.Text.hashedLinearScoreNative(col("text")).as("score"),
@@ -4737,7 +4688,6 @@ object SparkEntry {
     // bin-weighted L1 gap as ece_ppm on every row. All integer-exact.
     // See Profile.calibrationBins.
     query("t43_calibration")((s, dir) => {
-      Graft.registerAll(s)
       val scored = par(tbl(s, dir, "documents")).select(
         col("doc_id"),
         graft.functions.Text.hashedLinearScoreNative(col("text")).as("score"),
@@ -4935,7 +4885,6 @@ object SparkEntry {
     // NON-decomposing repertoire (\u00f8 stays). See
     // functions.StripAccents.
     query("t45_strip_accents")((s, dir) => {
-      Graft.registerAll(s)
       val words = typedLit(Seq("Z\u00fcrich", "caf\u00e9",
         "st\u0155\u00e4nge", "\u00f8re", "na\u00efve", "S\u00e3o"))
       val raw = concat(element_at(words, (col("doc_id") % 6 + 1).cast("int")),
@@ -4966,7 +4915,6 @@ object SparkEntry {
     // acute/diaeresis/ring), precomposed, and ASCII tails per doc_id
     // residue; md5 of the normalized text certifies byte equality.
     query("t44_nfc_normalize")((s, dir) => {
-      Graft.registerAll(s)
       // residue 0: DECOMPOSED (e + U+0301, o + U+0308) -- must change;
       // residue 1: the same text PRECOMPOSED (U+00E9, U+00F6) --
       // already NFC, must NOT change; residue 2: A + combining ring
@@ -5004,7 +4952,6 @@ object SparkEntry {
     // the augmented corpus so the constructed truncated copies produce
     // real duplicated mass. See Dedup.dupShingleCoverage.
     query("t35_dup_ngrams")((s, dir) => {
-      Graft.registerAll(s) // hashed_shingles codegen expression
       Dedup.dupShingleCoverage(augmentedDocs(s, dir), n = 5, minDf = 2)
     }) {
       s"""WITH ${augShinglesSql(5)}, ex AS (
@@ -5024,7 +4971,6 @@ object SparkEntry {
     // via (min+max)/2 over globalRank's contiguous tie groups; pure
     // integer micro arithmetic. See Profile.aucExact.
     query("t33_auc")((s, dir) => {
-      Graft.registerAll(s)
       val scored = par(tbl(s, dir, "documents")).select(
         col("doc_id"),
         graft.functions.Text.hashedLinearScoreNative(col("text")).as("score"),
@@ -5059,7 +5005,6 @@ object SparkEntry {
         |FROM t""".stripMargin
     },
     query("t25_quality_model")((s, dir) => {
-      Graft.registerAll(s) // hashed_linear_score codegen expression
       par(tbl(s, dir, "documents"))
         .select(col("doc_id"),
           graft.functions.Text.tokenCount(col("text")).cast("long").as("n_tokens"),
@@ -5678,7 +5623,6 @@ object SparkEntry {
     // vectors against the labeled rest — the standard embedding-quality
     // probe. Corpus never shuffled; see Similarity.knnClassify.
     query("s13_knn_classify")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.knnClassify(par(e.where(col("vec_id") >= 20)),
         e.where(col("vec_id") < 20), "vec_id", "embedding", "label", k = 5)
@@ -5953,7 +5897,6 @@ object SparkEntry {
     // exact integer arithmetic (md5-seeded planes; the LSH family) —
     // exploded to (vec_id, dim, v) rows. See Similarity.randomProject.
     query("s16_random_projection")((s, dir) => {
-      Graft.registerAll(s)
       Similarity.randomProject(par(tbl(s, dir, "embeddings")),
         "vec_id", "embedding", outDim = 16)
         .select(col("vec_id"), posexplode(col("proj")).as(Seq("dim", "v")))
@@ -5981,7 +5924,6 @@ object SparkEntry {
     // generation as a join key, not post-filtered below k). Corpus
     // never shuffled; see Similarity.filteredTopK.
     query("s14_ann_filtered")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
       Similarity.filteredTopK(par(e), e.where(col("vec_id") < 20),
         "vec_id", "embedding", "label", k = 5)
@@ -6433,7 +6375,6 @@ object SparkEntry {
     // the memorization/novelty curation signal. Inverted index without
     // pair fan-out; see Dedup.shingleNovelty.
     query("t31_novelty")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.shingleNovelty(par(tbl(s, dir, "documents")))
     }) {
       s"""WITH norm AS (
@@ -7517,7 +7458,6 @@ object SparkEntry {
     // because occupancy grew with N). Same keeper rule and oracle shape
     // as d12, k = ⌈1000/64⌉ = 16 at sf0.01 instead of the pinned 8.
     query("d25_semdedup_cellsize")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.semDedupByCellSize(augmentedEmb(s, dir), targetCellSize = 64,
         iters = 2, threshold = 0.95)
     }) {
@@ -7820,7 +7760,6 @@ object SparkEntry {
     // (first occurrence wins) — the corpus is never re-clustered or
     // re-shuffled. See Dedup.semDedupIncrementalNew.
     query("d31_incremental_semdedup")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val near = transform(col("embedding"), x => x * 1.1 + 0.01)
@@ -7907,7 +7846,6 @@ object SparkEntry {
     // threshold screen before the argmax. See
     // Decontaminate.semanticReport.
     query("d33_semantic_decontam")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val evalSet = e.where(col("vec_id") % 83 === 0)
@@ -7959,7 +7897,6 @@ object SparkEntry {
     // vectors land in the complement bucket and stay clean. See
     // Decontaminate.semanticReportBanded.
     query("d35_semantic_decontam_banded")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val evalSet = e.where(col("vec_id") % 83 === 0)
@@ -8029,7 +7966,6 @@ object SparkEntry {
     // cell — N·O(√k) dots, never flat Lloyd's N·k). See
     // Dedup.semDedupIncrementalNewByCellSize.
     query("d32_incr_semdedup_cellsize")((s, dir) => {
-      Graft.registerAll(s)
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val near = transform(col("embedding"), x => x * 1.1 + 0.01)
@@ -8175,7 +8111,6 @@ object SparkEntry {
     // ≥ ~689k ppm against their sources; unrelated template docs p99.9
     // ≈ 228k — probed in DuckDB before shipping).
     query("d26_winnowing")((s, dir) => {
-      Graft.registerAll(s)
       Dedup.winnowingPairs(excerptDocs(s, dir), k = 8, w = 4, dfCap = 64,
         minOverlapPpm = 500000L)
     }) {

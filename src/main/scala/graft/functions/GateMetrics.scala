@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -84,10 +83,6 @@ object GateMetrics {
 
   val schema: StructType =
     StructType(fieldNames.map(n => StructField(n, LongType, nullable = false)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => GateMetrics(exprs(0)), "scala_udf")
 }
 
 /** The scanner behind [[GateMetrics]] — static so codegen emits one

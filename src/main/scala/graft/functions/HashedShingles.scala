@@ -3,10 +3,11 @@ package graft.functions
 import java.security.MessageDigest
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -93,6 +94,9 @@ case class HashedShingles(child: Expression, n: Int) extends UnaryExpression {
 object HashedShingles {
   val name = "hashed_shingles"
 
+  def apply(text: Column, n: Int): Column =
+    ColumnBridge.column(HashedShingles(ColumnBridge.expression(text), n))
+
   private[functions] val WsPattern = Pattern.compile("\\s+")
   private[functions] val TokPattern = Pattern.compile("[a-zA-Z0-9']+")
 
@@ -117,14 +121,4 @@ object HashedShingles {
       ((d(3) & 0xffL) << 32) | ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
       ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
   }
-
-  /** Registers `hashed_shingles(text, n)` (n must be a foldable integer
-    * literal) in the session's function registry (done by
-    * [[graft.Graft.registerAll]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => HashedShingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `long_dot(array<bigint>, array<bigint>) -> bigint` — integer dot product
@@ -68,9 +69,6 @@ case class LongArrayDot(left: Expression, right: Expression)
 object LongArrayDot {
   val name = "long_dot"
 
-  /** Registers `long_dot` in the session's function registry (done by
-    * [[graft.Graft.registerAll]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LongArrayDot(exprs(0), exprs(1)), "scala_udf")
+  def apply(a: Column, b: Column): Column = ColumnBridge.column(
+    LongArrayDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

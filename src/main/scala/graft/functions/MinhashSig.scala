@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `minhash_sig(array<bigint>, k) -> array<bigint>` — the k-hash MinHash
@@ -93,12 +94,6 @@ case class MinhashSig(child: Expression, k: Int) extends UnaryExpression {
 object MinhashSig {
   val name = "minhash_sig"
 
-  /** Registers `minhash_sig(arr, k)` (k must be a foldable integer literal)
-    * in the session's function registry (done by [[graft.Graft.registerAll]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => MinhashSig(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+  def apply(shingles: Column, k: Int): Column =
+    ColumnBridge.column(MinhashSig(ColumnBridge.expression(shingles), k))
 }

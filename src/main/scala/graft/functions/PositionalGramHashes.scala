@@ -2,10 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -88,13 +89,6 @@ case class PositionalGramHashes(child: Expression, k: Int)
 object PositionalGramHashes {
   val name = "positional_gram_hashes"
 
-  /** Registers `positional_gram_hashes(text, k)` (k must be a foldable
-    * integer literal) in the session's function registry (done by
-    * [[graft.Graft.registerAll]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => PositionalGramHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+  def apply(text: Column, k: Int): Column =
+    ColumnBridge.column(PositionalGramHashes(ColumnBridge.expression(text), k))
 }

@@ -42,13 +42,11 @@ object Text {
       acc + (conv(substring(md5(concat(lit("qw|"), t)), 1, 15), 16, 10)
         .cast("long") % 2001 - 1000))
 
-  /** [[hashedLinearScore]] via the fused one-pass expression — requires
-    * [[graft.Graft.registerAll]] on the session. Identical output; the
-    * composable `aggregate` HOF evaluates the md5 expression tree
+  /** [[hashedLinearScore]] via the fused one-pass expression. Identical
+    * output; the composable `aggregate` HOF evaluates the md5 expression tree
     * interpreted once per token (measured 15.8× vs ~2× scaling at the
     * round-6 10× rehearsal). */
-  def hashedLinearScoreNative(c: Column): Column =
-    call_function(graft.functions.HashedLinearScore.name, c)
+  def hashedLinearScoreNative(c: Column): Column = HashedLinearScore(c)
 
   private val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "of", "to", "and", "in", "is", "that", "it", "for"),
@@ -155,12 +153,11 @@ object Text {
         .cast("long")))
   }
 
-  /** [[fingerprint64]] via the fused one-pass expression — requires
-    * [[graft.Graft.registerAll]] on the session. Identical output; the
-    * composable form re-normalizes the document once per gram in
+  /** [[fingerprint64]] via the fused one-pass expression. Identical
+    * output; the composable form re-normalizes the document once per gram in
     * interpreted HOF evaluation. */
   def fingerprint64Native(c: Column, k: Int = 8): Column =
-    call_function(graft.functions.Fingerprint64.name, c, lit(k))
+    Fingerprint64(c, k)
 
   /** Deterministic word-dropout augmentation: the kept-token array of
     * the lowercased word tokens, where the token at 1-based position

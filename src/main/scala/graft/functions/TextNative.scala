@@ -2,10 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -75,9 +76,8 @@ case class Simhash32(child: Expression) extends UnaryExpression {
 object Simhash32 {
   val name = "simhash32"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => Simhash32(exprs(0)), "scala_udf")
+  def apply(text: Column): Column =
+    ColumnBridge.column(Simhash32(ColumnBridge.expression(text)))
 }
 
 /** `fingerprint64(text, k) -> bigint` — minimum 60-bit md5 hash over all
@@ -124,12 +124,8 @@ case class Fingerprint64(child: Expression, k: Int) extends UnaryExpression {
 object Fingerprint64 {
   val name = "fingerprint64"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => Fingerprint64(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+  def apply(text: Column, k: Int): Column =
+    ColumnBridge.column(Fingerprint64(ColumnBridge.expression(text), k))
 }
 
 /** `hashed_linear_score(text) -> bigint` — the fastText-style hashed
@@ -179,7 +175,6 @@ case class HashedLinearScore(child: Expression) extends UnaryExpression {
 object HashedLinearScore {
   val name = "hashed_linear_score"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => HashedLinearScore(exprs(0)), "scala_udf")
+  def apply(text: Column): Column =
+    ColumnBridge.column(HashedLinearScore(ColumnBridge.expression(text)))
 }

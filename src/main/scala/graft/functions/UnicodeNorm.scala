@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -61,12 +62,8 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 object NfcNormalize {
   val name = "nfc_normalize"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => NfcNormalize(exprs(0)), "scala_udf")
-
   def apply(c: Column): Column =
-    org.apache.spark.sql.functions.call_function(name, c)
+    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
 }
 
 /** `strip_accents(text) → string` — diacritic removal by canonical
@@ -122,10 +119,6 @@ case class StripAccents(child: Expression) extends UnaryExpression {
 object StripAccents {
   val name = "strip_accents"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => StripAccents(exprs(0)), "scala_udf")
-
   def apply(c: Column): Column =
-    org.apache.spark.sql.functions.call_function(name, c)
+    ColumnBridge.column(StripAccents(ColumnBridge.expression(c)))
 }

@@ -234,8 +234,7 @@ object Decontaminate {
     val marks = train
       .where(Dedup.tryLongId(idCol).isNotNull)
       .select(Dedup.tryLongId(idCol).as("doc_id"),
-        posexplode(call_function(
-          graft.functions.PositionalGramHashes.name, col(textCol), lit(k))))
+        posexplode(graft.functions.PositionalGramHashes(col(textCol), k)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("_p"),
         col("col").as("_h"))
       .join(broadcast(evalGrams), "_h")
@@ -251,8 +250,7 @@ object Decontaminate {
     * with `textCol` works. Schema: one `_h` long column. */
   def evalGramSet(eval: DataFrame, textCol: String = "text",
       k: Int = 8): DataFrame =
-    eval.select(explode(call_function(
-        graft.functions.PositionalGramHashes.name, col(textCol), lit(k)))
+    eval.select(explode(graft.functions.PositionalGramHashes(col(textCol), k))
         .as("_h"))
       .distinct()
 

@@ -98,15 +98,14 @@ object Dedup {
     * re-evaluate the tokenization subtree per shingle in interpreted mode
     * (10-80x per-task blowup measured on the shingle stage); the query
     * paths use [[hashedShingleSetNative]], which computes the identical
-    * hashes in one pass. Kept as the equivalence-test oracle and for
-    * sessions without the graft registry. */
+    * hashes in one pass. Kept as the equivalence-test oracle. */
   def hashedShingleSet(text: Column, n: Int = 3): Column =
     array_distinct(transform(shingleSet(text, n), s => hash60(s)))
 
-  /** [[hashedShingleSet]] via the fused one-pass expression — requires
-    * [[graft.Graft.registerAll]] on the session. Identical output. */
+  /** [[hashedShingleSet]] via the fused one-pass expression. Identical
+    * output. */
   def hashedShingleSetNative(text: Column, n: Int = 3): Column =
-    call_function(graft.functions.HashedShingles.name, text, lit(n))
+    graft.functions.HashedShingles(text, n)
 
   // MinHash hash family h_i(x) = (a_i * (x mod 2^28) + b_i) mod (2^31-1).
   // Constants are md5-derived (reproducible in SQL); sizes are chosen so
@@ -122,8 +121,7 @@ object Dedup {
   /** MinHash signature (length k) over a hashed-shingle array, composed
     * from built-in higher-order functions. Reference semantics for
     * [[graft.functions.MinhashSig]] (the codegen form used on the hot
-    * path); kept for sessions without the graft registry and as the
-    * equivalence-test oracle. */
+    * path); kept as the equivalence-test oracle. */
   def minhashSignature(hashedShingles: Column, k: Int): Column = {
     val (as, bs) = minhashParams(k)
     val aLit = typedLit(as)
@@ -133,11 +131,10 @@ object Dedup {
         (element_at(aLit, i + 1) * (h % MinhashM) + element_at(bLit, i + 1)) % MinhashP)))
   }
 
-  /** MinHash signature via the fused codegen expression — requires
-    * [[graft.Graft.registerAll]] on the session. Identical output to
-    * [[minhashSignature]] for non-empty shingle sets. */
+  /** MinHash signature via the fused codegen expression. Identical
+    * output to [[minhashSignature]] for non-empty shingle sets. */
   def minhashSignatureNative(hashedShingles: Column, k: Int): Column =
-    call_function(graft.functions.MinhashSig.name, hashedShingles, lit(k))
+    graft.functions.MinhashSig(hashedShingles, k)
 
   /** 32-bit SimHash over the document's distinct token set. Composable
     * reference form (re-derives the hashed token array once per bit in
@@ -153,10 +150,9 @@ object Dedup {
     }.reduce(_ + _)
   }
 
-  /** [[simhash32]] via the fused one-pass expression — requires
-    * [[graft.Graft.registerAll]] on the session. Identical output. */
+  /** [[simhash32]] via the fused one-pass expression. Identical output. */
   def simhash32Native(text: Column): Column =
-    call_function(graft.functions.Simhash32.name, text)
+    graft.functions.Simhash32(text)
 
   /** Exact deduplication: group by content hash; each row is annotated
     * with its group's keeper (min id) and multiplicity. Single shuffle on
@@ -1271,7 +1267,12 @@ object Dedup {
     *
     * Output: (doc_id, group_id) for every node appearing in `pairs`;
     * documents without any near-dup pair are their own singleton group —
-    * left-join this result and coalesce to the document's own id. */
+    * left-join this result and coalesce to the document's own id. A
+    * `(NULL, x)` pair canonicalizes to the self-loop `(x, x)`: `x` gets a
+    * row, the NULL id none.
+    *
+    * Throws `IllegalStateException` when the labels have not converged
+    * after `maxIter` rounds, instead of returning wrong labels. */
   def connectedComponents(
       pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxIter: Int = 25): DataFrame = {
@@ -1334,6 +1335,9 @@ object Dedup {
       labels = next.drop("_changed")
       iter += 1
     }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds")
     labels.select(col("id").as("doc_id"), col("lbl").as("group_id"))
   }
 
@@ -1740,8 +1744,7 @@ object Dedup {
     val grams = docs
       .where(tryLongId(idCol).isNotNull) // quarantine unparseable ids
       .select(packedDomainId(idCol).as("doc_id"),
-        posexplode(call_function(
-          graft.functions.PositionalGramHashes.name, col(textCol), lit(k))))
+        posexplode(graft.functions.PositionalGramHashes(col(textCol), k)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("_p"),
         col("col").as("_h"))
       .localCheckpoint() // shared by the frequency aggregate + mark join
@@ -1801,8 +1804,7 @@ object Dedup {
     corpus
       .where(tryLongId(idCol).isNotNull) // quarantine unparseable ids
       .select(packedDomainId(idCol).as("doc_id"),
-        posexplode(call_function(
-          graft.functions.PositionalGramHashes.name, col(textCol), lit(k))))
+        posexplode(graft.functions.PositionalGramHashes(col(textCol), k)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("_p"),
         col("col").as("_h"))
       .groupBy(col("_h"))
@@ -1852,8 +1854,7 @@ object Dedup {
     val grams = batch
       .where(tryLongId(idCol).isNotNull) // quarantine unparseable ids
       .select(packedDomainId(idCol).as("doc_id"),
-        posexplode(call_function(
-          graft.functions.PositionalGramHashes.name, col(textCol), lit(k))))
+        posexplode(graft.functions.PositionalGramHashes(col(textCol), k)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("_p"),
         col("col").as("_h"))
       .localCheckpoint() // shared by the count aggregate + mark join

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession, functions}
+import org.apache.spark.sql.{Column, Encoder, Encoders, functions}
 
 /** Input row of `retention_count`: the four SQL arguments.
   *
@@ -15,13 +15,47 @@ import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession, functions}
   */
 case class RetentionCountInput(born: Boolean, target: Boolean, maxUnit: Long, timeDiff: Long)
 
-/** Buffer: the per-group born/target bitmap pair. Empty arrays = not yet
+/** Buffer: the per-group born/target bitmap pair — also the per-user
+  * state of [[graft.streaming.StatefulRetention]]. Empty arrays = not yet
   * initialized (the reference's `max_unit == -1` sentinel,
   * src/retention/retention_count.rs:37,78). Values are 0/1/2; `2` marks a
-  * day whose target event fired on a row that was simultaneously the born
-  * event (consumed by RetentionSumAgg's same-day suppression rule).
+  * day whose target event fired only on rows that were simultaneously the
+  * born event (consumed by RetentionSumAgg's same-day suppression rule).
   */
 case class RetentionCountBuffer(var born: Array[Byte], var target: Array[Byte])
+
+/** The bitmap update and merge rule — the one copy, used by the batch
+  * aggregate's `reduce` and `merge` and by the streaming state.
+  *
+  * Target markers rank `0 < 2 < 1`: a day keeps its strongest marker, so
+  * a target-only row outranks the self-marker `2` whatever the row order
+  * or partitioning. This departs from the reference, whose per-row
+  * assignment lets the last write win within a partition
+  * (src/retention/retention_count.rs:103-113) while its merge takes the
+  * numeric max — the same rows then give different bitmaps on different
+  * partitionings.
+  */
+object RetentionBitmap {
+
+  private def stronger(a: Byte, b: Byte): Byte = if (a == 1 || b == 0) a else b
+
+  /** Records one row at day `t`: `born(t) = 1` when born; when target,
+    * the marker `2` if the row is also born, else `1`, kept by rank. */
+  def record(buf: RetentionCountBuffer, t: Int, born: Boolean, target: Boolean): Unit = {
+    if (born) buf.born(t) = 1
+    if (target) buf.target(t) = stronger(buf.target(t), if (born) 2 else 1)
+  }
+
+  /** Folds `from` into `into` (same window length) by the same rank. */
+  def merge(into: RetentionCountBuffer, from: RetentionCountBuffer): Unit = {
+    var i = 0
+    while (i < from.born.length) {
+      if (from.born(i) == 1) into.born(i) = 1
+      into.target(i) = stronger(into.target(i), from.target(i))
+      i += 1
+    }
+  }
+}
 
 /** `retention_count(born BOOLEAN, target BOOLEAN, max_unit BIGINT,
   * time_diff BIGINT) -> ARRAY<ARRAY<TINYINT>>` — per-user retention bitmap
@@ -31,10 +65,10 @@ case class RetentionCountBuffer(var born: Array[Byte], var target: Array[Byte])
   * Spark-native re-expression of the reference accumulator
   * (src/retention/retention_count.rs:25-178):
   *   - per-row update: born -> `born(t) = 1`; target -> `target(t) = 2`
-  *     when the same row is also born, else `1` (reference :103-113; plain
-  *     assignment, so within a partition last write wins);
-  *   - merge: elementwise max, adopting the other side wholesale when
-  *     uninitialized (reference :143-177);
+  *     when the same row is also born, else `1` (reference :103-113),
+  *     kept by the [[RetentionBitmap]] rank so row order never matters;
+  *   - merge: the same rank elementwise, adopting the other side
+  *     wholesale when uninitialized (reference :143-177);
   *   - finish: `[born, target]` (reference :122-130).
   *
   * Registered via `functions.udaf`, which gives Spark's partial/final
@@ -63,8 +97,7 @@ class RetentionCountAgg
         s"retention_count: time_diff $t outside window [0, ${b.born.length - 1}]; " +
           "pre-filter the time column into the retention window")
     }
-    if (in.born) b.born(t) = 1
-    if (in.target) b.target(t) = if (in.born) 2 else 1
+    RetentionBitmap.record(b, t, in.born, in.target)
     b
   }
 
@@ -73,15 +106,7 @@ class RetentionCountAgg
       b: RetentionCountBuffer): RetentionCountBuffer = {
     if (a.born.isEmpty) b
     else if (b.born.isEmpty) a
-    else {
-      var i = 0
-      while (i < b.born.length) {
-        if (b.born(i) > a.born(i)) a.born(i) = b.born(i)
-        if (b.target(i) > a.target(i)) a.target(i) = b.target(i)
-        i += 1
-      }
-      a
-    }
+    else { RetentionBitmap.merge(a, b); a }
   }
 
   override def finish(b: RetentionCountBuffer): Seq[Seq[Byte]] =
@@ -181,11 +206,12 @@ class RetentionSumAgg
     ExpressionEncoder[Seq[Seq[Long]]]()
 }
 
-/** Column-API and SQL registration for the retention aggregates. */
+/** Column API for the retention aggregates; their SQL registration is
+  * [[graft.functions.FunctionTable]]. */
 object Retention {
-  private lazy val retentionCountUdf =
+  private[graft] lazy val retentionCountUdf =
     functions.udaf(new RetentionCountAgg, Encoders.product[RetentionCountInput])
-  private lazy val retentionSumUdf =
+  private[graft] lazy val retentionSumUdf =
     functions.udaf(new RetentionSumAgg, ExpressionEncoder[Seq[Seq[Byte]]]())
 
   /** `retention_count(born, target, max_unit, time_diff)` as a Column. */
@@ -194,11 +220,4 @@ object Retention {
 
   /** `retention_sum(stats)` as a Column. */
   def retention_sum(stats: Column): Column = retentionSumUdf(stats)
-
-  /** Registers both aggregates as SQL functions (the analogue of
-    * `ctx.register_udaf`, reference examples/retention.rs:19-20). */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("retention_count", retentionCountUdf)
-    spark.udf.register("retention_sum", retentionSumUdf)
-  }
 }

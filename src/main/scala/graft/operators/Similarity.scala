@@ -79,10 +79,8 @@ object Similarity {
     transform(vec, x => round(x.cast("double") * scale).cast("long"))
 
   /** Exact integer dot product of two quantized vectors, via the codegen
-    * [[graft.functions.LongArrayDot]] expression (requires
-    * `Graft.registerAll` / `LongArrayDot.register` on the session). */
-  def dotQ(a: Column, b: Column): Column =
-    call_function(graft.functions.LongArrayDot.name, a, b)
+    * [[graft.functions.LongArrayDot]] expression. */
+  def dotQ(a: Column, b: Column): Column = graft.functions.LongArrayDot(a, b)
 
   /** Cosine from precomputed integer dot and squared norms. */
   def cosineFrom(dot: Column, n2a: Column, n2b: Column): Column =

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+
+import graft.operators.{RetentionBitmap, RetentionCountBuffer}
 
 /** One pre-shaped retention event: day offset into the window plus the
   * born/target flags (the UDAF's CASE arguments, evaluated upstream). */
@@ -14,11 +16,6 @@ case class RetentionEvent(user_id: Long, born: Boolean, target: Boolean, t: Int)
 case class TimedRetentionEvent(
     user_id: Long, born: Boolean, target: Boolean, t: Int, ts: java.sql.Timestamp)
 
-/** Per-user streaming state: the same two bitmap vectors the batch
-  * `retention_count` accumulator keeps (reference:
-  * src/retention/retention_count.rs:25-39). */
-case class RetentionState(born: Array[Byte], target: Array[Byte])
-
 /** Emitted per update: the user's current `[born_vec, target_vec]` pair,
   * widened to long for parity with the oracle-facing batch output. */
 case class RetentionStats(user_id: Long, stats: Seq[Seq[Long]])
@@ -28,12 +25,13 @@ case class RetentionStats(user_id: Long, stats: Seq[Seq[Long]])
   * the semantics (the retention bitmap update with its born/target marker
   * rules is exactly that case).
   *
-  * Update rules mirror the batch accumulator bit-for-bit
+  * Per-user state is the batch accumulator's [[RetentionCountBuffer]],
+  * updated by the same [[RetentionBitmap.record]] rule
   * (reference: src/retention/retention_count.rs:90-119): `born[t] = 1`
   * when the born predicate fires, `target[t] = 2` when the same event is
   * also the born event (the self-retention marker `retention_sum`
-  * consumes), else `1`. Merging across micro-batches is monotone
-  * (elementwise max semantics), so emissions converge to the batch
+  * consumes), else `1`, a target-only event outranking the marker `2`.
+  * Every bit only moves up that rank, so emissions converge to the batch
   * answer regardless of event arrival order.
   *
   * State is bounded: `2 × (winDays+1)` bytes per user. At 100 TB scale,
@@ -52,27 +50,30 @@ object StatefulRetention {
       bornType: String, targetType: String): Dataset[RetentionEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
+    shaped(events, winStart, winDays, bornType, targetType).as[RetentionEvent]
+  }
+
+  /** [[shapeEvents]]' window filter and columns, plus `extra` columns. */
+  private def shaped(
+      events: DataFrame, winStart: String, winDays: Int,
+      bornType: String, targetType: String, extra: Column*): DataFrame =
     events
       .where(col("ts") >= lit(winStart).cast("timestamp") &&
         col("ts") < date_add(lit(winStart).cast("date"), winDays).cast("timestamp"))
-      .select(col("user_id").cast("long").as("user_id"),
+      .select(Seq(col("user_id").cast("long").as("user_id"),
         (col("event_type") === bornType).as("born"),
         (col("event_type") === targetType).as("target"),
         datediff(to_date(col("ts")), lit(winStart).cast("date")).cast("int").as("t"))
-      .as[RetentionEvent]
-  }
+        ++ extra: _*)
 
   /** The shared per-group fold: apply a batch of events to the state and
     * shape the emission. */
   private def updateState(uid: Long, it: Iterator[(Boolean, Boolean, Int)],
-      state: GroupState[RetentionState], winDays: Int): RetentionStats = {
+      state: GroupState[RetentionCountBuffer], winDays: Int): RetentionStats = {
     val s = state.getOption.getOrElse(
-      RetentionState(new Array[Byte](winDays), new Array[Byte](winDays)))
+      RetentionCountBuffer(new Array[Byte](winDays), new Array[Byte](winDays)))
     it.foreach { case (born, target, t) =>
-      if (t >= 0 && t < winDays) {
-        if (born) s.born(t) = 1
-        if (target) s.target(t) = if (born) 2 else 1
-      }
+      if (t >= 0 && t < winDays) RetentionBitmap.record(s, t, born, target)
     }
     state.update(s)
     RetentionStats(uid,
@@ -89,8 +90,8 @@ object StatefulRetention {
     import spark.implicits._
     shapeEvents(events, winStart, winDays, bornType, targetType)
       .groupByKey(_.user_id)
-      .mapGroupsWithState[RetentionState, RetentionStats](GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[RetentionEvent], state: GroupState[RetentionState]) =>
+      .mapGroupsWithState[RetentionCountBuffer, RetentionStats](GroupStateTimeout.NoTimeout) {
+        (uid: Long, it: Iterator[RetentionEvent], state: GroupState[RetentionCountBuffer]) =>
           updateState(uid, it.map(e => (e.born, e.target, e.t)), state, winDays)
       }
   }
@@ -118,20 +119,14 @@ object StatefulRetention {
     val winEndMs = java.time.LocalDate.parse(winStart).plusDays(winDays)
       .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
     // flatMap (not map) so timed-out groups can emit zero rows
-    events.withWatermark("ts", watermarkDelay)
-      .where(col("ts") >= lit(winStart).cast("timestamp") &&
-        col("ts") < date_add(lit(winStart).cast("date"), winDays).cast("timestamp"))
-      .select(col("user_id").cast("long").as("user_id"),
-        (col("event_type") === bornType).as("born"),
-        (col("event_type") === targetType).as("target"),
-        datediff(to_date(col("ts")), lit(winStart).cast("date")).cast("int").as("t"),
-        col("ts"))
+    shaped(events.withWatermark("ts", watermarkDelay),
+        winStart, winDays, bornType, targetType, col("ts"))
       .as[TimedRetentionEvent]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RetentionState, RetentionStats](
+      .flatMapGroupsWithState[RetentionCountBuffer, RetentionStats](
         org.apache.spark.sql.streaming.OutputMode.Update,
         GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[TimedRetentionEvent], state: GroupState[RetentionState]) =>
+        (uid: Long, it: Iterator[TimedRetentionEvent], state: GroupState[RetentionCountBuffer]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             val out = updateState(uid, it.map(e => (e.born, e.target, e.t)), state, winDays)

@@ -54,8 +54,7 @@ object StreamingContamination {
     val flagged = docs
       .where(graft.operators.Dedup.tryLongId(idCol).isNotNull) // shared id quarantine
       .select(graft.operators.Dedup.tryLongId(idCol).as("doc_id") +:
-        explode(call_function(
-          graft.functions.PositionalGramHashes.name, col(textCol), lit(k)))
+        explode(graft.functions.PositionalGramHashes(col(textCol), k))
           .as("_h") +:
         eventTimeCol.map(col).toSeq: _*)
       .join(evalGrams, "_h")

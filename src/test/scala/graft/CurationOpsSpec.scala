@@ -169,9 +169,8 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("extension-injection builders expand to analyzable trees, not lazy wrappers") {
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import graft.functions.SqlFunctions
-    val (name, arity, f) = SqlFunctions.all.find(_._1 == "token_count").get
-    val expr = SqlFunctions.builder(name, arity, f)(Seq(Literal("a b c")))
+    val expr = graft.functions.FunctionTable.all.find(_.name == "token_count").get
+      .builder(Seq(Literal("a b c")))
     // a lazy ColumnNodeExpression never resolves when built outside a
     // Dataset operation — it would reach codegen unresolved and throw
     assert(!expr.exists(_.getClass.getName.contains("ColumnNodeExpression")),

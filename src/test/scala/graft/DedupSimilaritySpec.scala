@@ -384,6 +384,25 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(groups === Set(1L))
   }
 
+  test("connected components throw at the round cap instead of returning unconverged labels") {
+    import spark.implicits._
+    val path = (1L until 128L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](Dedup.connectedComponents(path, maxIter = 2))
+    assert(e.getMessage.contains("2 rounds"), e.getMessage)
+    val got = Dedup.connectedComponents(path).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (1L to 128L).map(_ -> 1L).toMap)
+  }
+
+  test("connected components: a (NULL, x) pair gives x its own row and the NULL id none") {
+    import spark.implicits._
+    val pairs = Seq((Some(1L), Some(2L)), (None, Some(5L)))
+      .toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(pairs).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(got === Set((Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(5L), Some(5L))))
+  }
+
   test("multi-probe LSH recall dominates single-probe against brute force") {
     // recall@5 on the testdata corpus: multi-probe (Hamming-1 probes)
     // must find a superset of single-probe's true neighbors, since its

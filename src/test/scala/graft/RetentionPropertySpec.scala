@@ -117,4 +117,34 @@ class RetentionPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("retention_count is independent of row order and partitioning when born and target rows overlap") {
+    // born = 'add', target = 'add' or 'buy': an 'add' row marks the day 2,
+    // a 'buy' row marks it 1, and the target-only 1 must win whatever the
+    // order the two rows reach the buffer in
+    val overlapSql =
+      s"""select distinct_id, retention_count(event = 'add',
+         |  event in ('add', 'buy'), ${winDays - 1}L,
+         |  cast(ds - 20230101 as bigint)) as stats
+         |from prop_overlap group by distinct_id""".stripMargin
+    (1 to 8).foreach { seed =>
+      val rows = randomEvents(seed)
+      val expected = rows.groupBy(_._1).map { case (u, rs) =>
+        val days = 0 until winDays
+        def on(d: Int, e: String) = rs.exists(r => r._2 == e && r._3 - 20230101 == d)
+        u -> Seq(
+          days.map(d => if (on(d, "add")) 1.toByte else 0.toByte),
+          days.map(d => if (on(d, "buy")) 1.toByte else if (on(d, "add")) 2.toByte else 0.toByte))
+      }
+      val rnd = new Random(seed)
+      for (order <- Seq(rows, rows.reverse, rnd.shuffle(rows)); parts <- 1 to 3) {
+        spark.createDataFrame(spark.sparkContext.parallelize(order, parts))
+          .toDF("distinct_id", "event", "ds").createOrReplaceTempView("prop_overlap")
+        val got = spark.sql(overlapSql).collect()
+          .map(r => r.getInt(0) -> r.getSeq[scala.collection.Seq[Byte]](1).toSeq.map(_.toSeq))
+          .toMap
+        assert(got === expected, s"seed=$seed, $parts partition(s)")
+      }
+    }
+  }
 }

@@ -89,6 +89,42 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("stateful retention with born == target: the self-marker 2 matches batch and UDAF") {
+    import graft.operators.Retention
+    import graft.streaming.StatefulRetention
+    val schema = spark.read.parquet(stagedDir).schema
+    // one file per micro-batch: the state carries markers across batches
+    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(stagedDir)
+    val q = StatefulRetention.perUserStats(stream, "2024-01-01", 7, "signup", "signup")
+      .toDF()
+      .writeStream.format("memory").queryName("ret_self").outputMode("update").start()
+    try {
+      q.processAllAvailable()
+      // markers here are 0 or 2 and only grow: the elementwise max of a
+      // user's emissions is the final state
+      def emax(a: Seq[Seq[Long]], b: Seq[Seq[Long]]): Seq[Seq[Long]] =
+        a.zip(b).map { case (x, y) => x.zip(y).map(t => t._1 max t._2) }
+      val streamed = spark.table("ret_self").collect()
+        .map(r => r.getLong(0) ->
+          r.getSeq[scala.collection.Seq[Long]](1).toSeq.map(_.toSeq))
+        .groupMapReduce(_._1)(_._2)(emax)
+      val batch = StatefulRetention
+        .perUserStats(spark.read.parquet(stagedDir), "2024-01-01", 7, "signup", "signup")
+        .collect().map(s => s.user_id -> s.stats.map(_.toSeq)).toMap
+      val udaf = StatefulRetention
+        .shapeEvents(spark.read.parquet(stagedDir), "2024-01-01", 7, "signup", "signup")
+        .groupBy(col("user_id"))
+        .agg(Retention.retention_count(col("born"), col("target"), lit(6L),
+          col("t").cast("long")).cast("array<array<bigint>>"))
+        .collect().map(r => r.getLong(0) ->
+          r.getSeq[scala.collection.Seq[Long]](1).toSeq.map(_.toSeq)).toMap
+      assert(streamed === batch)
+      assert(streamed === udaf)
+      assert(streamed.values.exists(_(1).contains(2L)))
+    } finally q.stop()
+  }
+
   test("stateful funnel (flatMapGroupsWithState): stream == batch operator") {
     import graft.streaming.StatefulFunnel
     val steps = Seq("signup", "click", "purchase")
