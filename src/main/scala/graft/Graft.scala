@@ -38,11 +38,16 @@ object Graft {
   /** Registers every SQL-callable function the library provides
     * ([[graft.functions.FunctionTable]]) in the session's function
     * registry — the analogue of the reference's `ctx.register_udaf`
-    * (examples/retention.rs:19-20). */
-  def registerAll(spark: SparkSession): Unit =
-    FunctionTable.all.foreach(f =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        f.name, f.builder, "scala_udf"))
+    * (examples/retention.rs:19-20). Idempotent: a name that already holds
+    * graft's own builder (an earlier call, or [[GraftExtensions]]) is left
+    * as it is. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    FunctionTable.all.foreach { f =>
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(f.name)).exists(_ eq f.builder))
+        registry.createOrReplaceTempFunction(f.name, f.builder, "scala_udf")
+    }
+  }
 
   /** Applies S3A object-store configuration to the session's Hadoop conf —
     * the Spark analogue of the reference's `register_object_store` +

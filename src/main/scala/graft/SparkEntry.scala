@@ -24,6 +24,10 @@ object SparkEntry {
     * microsecond timestamp, so every downstream query sees one `ts` type;
     * all query logic is at day/second granularity so the normalization is
     * lossless for results.
+    *
+    * A table's schema is fixed for a session's lifetime: the first read
+    * infers it (one Spark job), later reads pass it to the reader and run
+    * none. Only the schema is kept; files are listed on every call.
     */
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -32,7 +36,7 @@ object SparkEntry {
       // common path never mutates session conf
       if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = readParquet(s, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => // nanos-as-long generation
           raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -44,21 +48,37 @@ object SparkEntry {
           throw new IllegalStateException(
             s"unexpected physical type for events.ts: $other")
       }
-    } else s.read.parquet(s"$dir/$name.parquet")
+    } else readParquet(s, s"$dir/$name.parquet")
 
-  /** Memoized 6-round BPE merge list (the t18/t19/t22 model), keyed on
-    * (session identity, data dir) so a sweep trains ONCE per corpus per
-    * session instead of once per query — training is deterministic, so
-    * sharing cannot change any result, and queries stay self-contained
-    * (a cold call trains inline exactly as before). Keying on the
-    * session's identity hash is the "clear on session change" rule:
-    * a new session never sees a stale entry; dead-session entries are
-    * 6 string pairs each, not worth an eviction hook. */
-  @transient private lazy val bpeMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), Seq[(String, String)]]()
+  /** The session confs that decide the type parquet schema inference gives
+    * `events.ts`; their values are part of the schema memo's key, so a
+    * mid-session change (as `tbl` itself makes on a foreign session)
+    * infers again. */
+  private val parquetSchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemaMemo =
+    new SessionMemo[(String, Seq[Option[String]]), org.apache.spark.sql.types.StructType]
+
+  /** `s.read.parquet(path)` over the path's memoised schema: inference
+    * (Spark's parquet footer job) runs once per session, path and
+    * [[parquetSchemaConfs]] values. */
+  private def readParquet(s: SparkSession, path: String): DataFrame = {
+    val key = (path, parquetSchemaConfs.map(s.conf.getOption))
+    s.read.schema(schemaMemo(s, key)(s.read.parquet(path).schema)).parquet(path)
+  }
+
+  /** Memoized 6-round BPE merge list (the t18/t19/t22 model), per session
+    * and data dir, so a sweep trains ONCE per corpus per session instead
+    * of once per query — training is deterministic, so sharing cannot
+    * change any result, and queries stay self-contained (a cold call
+    * trains inline exactly as before). A new session never sees a stale
+    * entry. */
+  private val bpeMergesMemo = new SessionMemo[String, Seq[(String, String)]]
 
   private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergesCache.computeIfAbsent((System.identityHashCode(s), dir), _ =>
+    bpeMergesMemo(s, dir)(
       // the batched trainer: proven output-equal to the sequential
       // greedy (TextOpsSpec), fewer driver round-trips per model build
       Bpe.trainMergesBatched(par(tbl(s, dir, "documents")), "text", rounds = 6)
@@ -522,9 +542,9 @@ object SparkEntry {
         |  GROUP BY e.user_id, s0.t0
         |)
         |SELECT count(*) AS n_converted,
-        |  round(quantile_cont(gap_us, 0.5) / 1e6, 6) AS p50_sec,
-        |  round(quantile_cont(gap_us, 0.9) / 1e6, 6) AS p90_sec,
-        |  round(quantile_cont(gap_us, 0.99) / 1e6, 6) AS p99_sec
+        |  round(quantile_cont(gap_us, 0.5), 1) / 1e6 AS p50_sec,
+        |  round(quantile_cont(gap_us, 0.9), 1) / 1e6 AS p90_sec,
+        |  round(quantile_cont(gap_us, 0.99), 2) / 1e6 AS p99_sec
         |FROM conv""".stripMargin
     },
     // Weekly cohort-retention matrix: users bucketed by signup week,
@@ -2532,19 +2552,19 @@ object SparkEntry {
           (unix_micros(col("t2")) - unix_micros(col("t1"))).cast("double").as("_d12"))
       st.agg(
         count(col("_d01")).as("n_step1"),
-        round(expr("percentile(_d01, 0.5)") / 1e6, 6).as("p50_01_sec"),
-        round(expr("percentile(_d01, 0.9)") / 1e6, 6).as("p90_01_sec"),
+        Latency.percentileSec(expr("percentile(_d01, 0.5)"), 0.5).as("p50_01_sec"),
+        Latency.percentileSec(expr("percentile(_d01, 0.9)"), 0.9).as("p90_01_sec"),
         count(col("_d12")).as("n_step2"),
-        round(expr("percentile(_d12, 0.5)") / 1e6, 6).as("p50_12_sec"),
-        round(expr("percentile(_d12, 0.9)") / 1e6, 6).as("p90_12_sec"))
+        Latency.percentileSec(expr("percentile(_d12, 0.5)"), 0.5).as("p50_12_sec"),
+        Latency.percentileSec(expr("percentile(_d12, 0.9)"), 0.9).as("p90_12_sec"))
     }) {
       s"""$funnelStagesSql
          |SELECT CAST(count(t1) AS BIGINT) AS n_step1,
-         |  round(quantile_cont(CAST(epoch_us(t1) - epoch_us(t0) AS DOUBLE), 0.5) / 1e6, 6) AS p50_01_sec,
-         |  round(quantile_cont(CAST(epoch_us(t1) - epoch_us(t0) AS DOUBLE), 0.9) / 1e6, 6) AS p90_01_sec,
+         |  round(quantile_cont(CAST(epoch_us(t1) - epoch_us(t0) AS DOUBLE), 0.5), 1) / 1e6 AS p50_01_sec,
+         |  round(quantile_cont(CAST(epoch_us(t1) - epoch_us(t0) AS DOUBLE), 0.9), 1) / 1e6 AS p90_01_sec,
          |  CAST(count(t2) AS BIGINT) AS n_step2,
-         |  round(quantile_cont(CAST(epoch_us(t2) - epoch_us(t1) AS DOUBLE), 0.5) / 1e6, 6) AS p50_12_sec,
-         |  round(quantile_cont(CAST(epoch_us(t2) - epoch_us(t1) AS DOUBLE), 0.9) / 1e6, 6) AS p90_12_sec
+         |  round(quantile_cont(CAST(epoch_us(t2) - epoch_us(t1) AS DOUBLE), 0.5), 1) / 1e6 AS p50_12_sec,
+         |  round(quantile_cont(CAST(epoch_us(t2) - epoch_us(t1) AS DOUBLE), 0.9), 1) / 1e6 AS p90_12_sec
          |FROM s2""".stripMargin
     },
     // As-of attribution join: each purchase attributed to the latest
@@ -2695,8 +2715,8 @@ object SparkEntry {
         |)
         |SELECT count(*) AS n_sessions,
         |  round(CAST(sum(n_events) AS DOUBLE) / count(*), 6) AS mean_events,
-        |  round(quantile_cont(dur_us, 0.5) / 1e6, 6) AS p50_sec,
-        |  round(quantile_cont(dur_us, 0.9) / 1e6, 6) AS p90_sec
+        |  round(quantile_cont(dur_us, 0.5), 1) / 1e6 AS p50_sec,
+        |  round(quantile_cont(dur_us, 0.9), 1) / 1e6 AS p90_sec
         |FROM per""".stripMargin
     },
     // Per-user daily-volume spike detection: one event-stream shuffle

@@ -18,8 +18,9 @@ final case class SqlFunction(
   /** The registry builder: rejects a wrong argument count, or anything
     * but an integer literal where one is required, with an
     * `AnalysisException` naming the function (the error class a failed
-    * `checkInputDataTypes` raises), then builds. */
-  def builder(args: Seq[Expression]): Expression = {
+    * `checkInputDataTypes` raises), then builds. One value per entry, so
+    * a registry can tell graft's own builder from any other. */
+  val builder: Seq[Expression] => Expression = args => {
     def reject(problem: String): Nothing = throw new AnalysisException(
       "DATATYPE_MISMATCH.TYPE_CHECK_FAILURE_WITH_HINT", Map(
         "sqlExpr" -> s"\"$name(${args.map(_.sql).mkString(", ")})\"",

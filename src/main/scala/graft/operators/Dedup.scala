@@ -1267,9 +1267,10 @@ object Dedup {
     *
     * Output: (doc_id, group_id) for every node appearing in `pairs`;
     * documents without any near-dup pair are their own singleton group —
-    * left-join this result and coalesce to the document's own id. A
-    * `(NULL, x)` pair canonicalizes to the self-loop `(x, x)`: `x` gets a
-    * row, the NULL id none.
+    * left-join this result and coalesce to the document's own id. No
+    * NULL id is ever output: a `(NULL, x)` pair canonicalizes to the
+    * self-loop `(x, x)`, so `x` gets a row and the NULL id none, and a
+    * `(NULL, NULL)` pair is dropped.
     *
     * Throws `IllegalStateException` when the labels have not converged
     * after `maxIter` rounds, instead of returning wrong labels. */
@@ -1281,10 +1282,12 @@ object Dedup {
     // lo<hi orientations cannot collide, so the doubled set stays
     // distinct by construction; a self-loop row is kept exactly once
     // (the old double-then-distinct behavior) by excluding it from the
-    // reversed side.
+    // reversed side. least/greatest skip a NULL id, so only a
+    // (NULL, NULL) pair leaves a NULL src, and it is dropped.
     val canon = pairs
       .select(least(col(idA), col(idB)).as("src"),
         greatest(col(idA), col(idB)).as("dst"))
+      .where(col("src").isNotNull)
       .distinct()
     // static per-iteration join side, materialized once
     val edges = canon.unionByName(canon.where(col("src") =!= col("dst"))

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object Latency {
 
   /** One-row report: `n_converted` plus one `p{N}_sec` column per
-    * requested percentile (gap in seconds, rounded to 1e-6). */
+    * requested percentile (gap in seconds, see [[percentileSec]]). */
   def conversionReport(
       events: DataFrame, fromEvent: String = "signup",
       toEvent: String = "purchase",
@@ -37,10 +37,21 @@ object Latency {
       else expr(s"approx_percentile(gap_us, $arr, $accuracy)").cast("array<double>")
     val outs: Seq[Column] = count(lit(1)).as("n_converted") +:
       probs.zipWithIndex.map { case (p, i) =>
-        round(element_at(pcts, i + 1) / 1e6, 6).as(s"p${(p * 100).round}_sec")
+        percentileSec(element_at(pcts, i + 1), p).as(s"p${(p * 100).round}_sec")
       }
     gaps.agg(outs.head, outs.tail: _*)
   }
+
+  /** Percentile `p` of integer microseconds, in seconds, the same double
+    * in any engine. The exact interpolated value lo + (hi - lo) *
+    * frac((n - 1) * p) lies on the 10^-d µs grid, d the decimal places of
+    * `p`: an even-count median ends in .0 or .5 µs. Rounding to that grid
+    * only strips the interpolation's floating error, far below half a
+    * step, so it never meets a tie (rounding x.5 µs to whole µs or
+    * x.5e-6 s to 6 decimals does, and Spark and DuckDB break it
+    * differently); the division by 1e6 is one correctly rounded step. */
+  private[graft] def percentileSec(pctUs: Column, p: Double): Column =
+    round(pctUs, BigDecimal(p).scale) / 1e6
 
   /** Per-converting-user gap table (`gap_us`, microseconds between the
     * first `fromEvent` and the first `toEvent` at-or-after it). One

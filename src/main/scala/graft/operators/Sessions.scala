@@ -90,7 +90,7 @@ object Sessions {
       round(sum(col("n_events")).cast("double") / count(lit(1)), 6)
         .as("mean_events")) ++
       probs.zipWithIndex.map { case (p, i) =>
-        round(element_at(pcts, i + 1) / 1e6, 6).as(s"p${(p * 100).round}_sec")
+        Latency.percentileSec(element_at(pcts, i + 1), p).as(s"p${(p * 100).round}_sec")
       }
     per.agg(outs.head, outs.tail: _*)
   }

@@ -403,6 +403,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(got === Set((Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(5L), Some(5L))))
   }
 
+  test("connected components: a (NULL, NULL) pair is dropped, so no NULL id is output") {
+    import spark.implicits._
+    val pairs = Seq((Some(1L), Some(2L)), (None, Some(5L)), (None, None))
+      .toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(pairs).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(got === Set((Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(5L), Some(5L))))
+  }
+
   test("multi-probe LSH recall dominates single-probe against brute force") {
     // recall@5 on the testdata corpus: multi-probe (Hamming-1 probes)
     // must find a superset of single-probe's true neighbors, since its

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FunctionTable
@@ -97,6 +98,28 @@ class FunctionTableSpec extends AnyFunSuite {
       rejected(s, f.name, query(f.name, Nil, from))
       rejected(s, f.name, query(f.name, args :+ args.last, from))
       f.intLiterals.foreach(i => rejected(s, f.name, query(f.name, args.updated(i, "k"), from)))
+    }
+  }
+
+  test("a repeat registerAll replaces nothing and leaves other functions alone") {
+    for (s <- Seq(spark, extSpark)) {
+      s.udf.register("user_plus_one", (x: Long) => x + 1)
+      val registry = s.sessionState.functionRegistry
+      def entries = (FunctionTable.all.map(_.name) :+ "user_plus_one").map { n =>
+        val id = FunctionIdentifier(n)
+        (registry.lookupFunction(id), registry.lookupFunctionBuilder(id))
+      }
+      val before = entries
+      Graft.registerAll(s)
+      Graft.registerAll(s)
+      // the same ExpressionInfo objects: no name was registered again
+      entries.zip(before).foreach { case ((i, b), (i0, b0)) =>
+        assert(i.get eq i0.get)
+        assert(b.get eq b0.get)
+      }
+      FunctionTable.all.foreach(f =>
+        assert(registry.lookupFunctionBuilder(FunctionIdentifier(f.name)).get eq f.builder, f.name))
+      assert(s.sql("select user_plus_one(1L) as v").head().getLong(0) === 2L)
     }
   }
 }

@@ -375,4 +375,61 @@ class FunnelSpec extends AnyFunSuite {
     case _ => ()
     }
   }
+
+  /** Interpolated percentile `p` of integer microseconds, in exact decimal
+    * arithmetic, as the double nearest to it in seconds. */
+  private def refPctSec(us: Seq[Long], p: Double): Double = {
+    val v = us.sorted.map(BigDecimal(_))
+    val pos = BigDecimal(v.size - 1) * BigDecimal(p)
+    val lo = pos.setScale(0, BigDecimal.RoundingMode.FLOOR)
+    val hi = pos.setScale(0, BigDecimal.RoundingMode.CEILING)
+    val x = v(lo.toInt) + (v(hi.toInt) - v(lo.toInt)) * (pos - lo)
+    (x / BigDecimal(1000000)).toDouble
+  }
+
+  test("percentile reports: an even-count median on x.5 us is exact in seconds") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    def check(got: Double, us: Seq[Long], p: Double, what: String): Unit = {
+      val ref = refPctSec(us, p)
+      // the median is exact; other percentiles divide a grid value that is
+      // itself a rounded double, so they may sit one ulp off the reference
+      if (p == 0.5) assert(got === ref, what)
+      else assert(math.abs(got - ref) <= math.ulp(ref), s"$what: $got vs $ref")
+    }
+    val t0 = 1704067200000000L // 2024-01-01 00:00:00 UTC
+    val d01 = Seq(135780466256L, 135780466257L) // median ends in .5 us
+    val d12 = Seq(1000001L, 1000001L)
+    val ev = d01.zip(d12).zipWithIndex.flatMap { case ((a, b), u) =>
+      Seq(("signup", t0), ("click", t0 + a), ("purchase", t0 + a + b))
+        .map { case (k, us) => (u.toLong, k, us) }
+    }.zipWithIndex.map { case ((u, k, us), i) => (i.toLong, u, k, us) }
+      .toDF("event_id", "user_id", "event_type", "us")
+      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+    val conv = graft.operators.Latency.conversionReport(ev).head()
+    val gaps = d01.zip(d12).map { case (a, b) => a + b }
+    Seq(0.5, 0.9, 0.99).zipWithIndex.foreach { case (p, i) =>
+      check(conv.getDouble(i + 1), gaps, p, s"q17 p$p")
+    }
+    assert(conv.getDouble(1) === 135781.4662575)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_pct").toString
+    ev.write.parquet(s"$dir/events.parquet")
+    val u21 = SparkEntry.queries("u21_funnel_latency")(spark, dir).head()
+    check(u21.getAs[Double]("p50_01_sec"), d01, 0.5, "u21 p50_01")
+    check(u21.getAs[Double]("p90_01_sec"), d01, 0.9, "u21 p90_01")
+    check(u21.getAs[Double]("p50_12_sec"), d12, 0.5, "u21 p50_12")
+    assert(u21.getAs[Double]("p50_01_sec") === 135780.4662565)
+
+    // two sessions of one user, 2 h apart, lasting 1000001 and 1000002 us
+    val durs = Seq(1000001L, 1000002L)
+    val sess = Seq(t0, t0 + durs(0), t0 + 7200000000L, t0 + 7200000000L + durs(1))
+      .zipWithIndex.map { case (us, i) => (9L, i.toLong, "view", us) }
+      .toDF("user_id", "event_id", "event_type", "us")
+      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+    val rep = Sessions.durationReport(sess).head()
+    check(rep.getDouble(2), durs, 0.5, "session p50")
+    check(rep.getDouble(3), durs, 0.9, "session p90")
+    assert(rep.getDouble(2) === 1.0000015)
+  }
 }
