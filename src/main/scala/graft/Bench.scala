@@ -764,7 +764,9 @@ object Bench {
     * line — additions only, both neighbours stay byte-identical.
     * Entries are ordered cheapest-first so the LAST chunks (the ones a
     * bare character-tail capture is most likely to retain whole) carry
-    * the heaviest queries — the numbers a reader weighs most. */
+    * the heaviest queries — the numbers a reader weighs most. Every
+    * line is at most `limit` chars: an entry too long to fit a line on
+    * its own is rejected with an IllegalArgumentException. */
   private[graft] def perQueryPartLines(results: Seq[(String, Double)],
       sfBase: String, limit: Int = 1800): Seq[String] = {
     if (results.isEmpty) Nil
@@ -781,6 +783,10 @@ object Bench {
           scala.collection.mutable.ArrayBuffer[String]())
         var len = overhead
         entries.foreach { e =>
+          // an entry cannot be split, and alone in a chunk it would still
+          // overflow the capture window
+          require(overhead + e.length <= limit,
+            s"per_query_part entry of ${e.length} chars cannot fit a $limit-char line: $e")
           if (groups.last.nonEmpty && len + e.length + 1 > limit) {
             groups += scala.collection.mutable.ArrayBuffer[String]()
             len = overhead
@@ -795,9 +801,11 @@ object Bench {
         .map(d => (d, pack(d))).collectFirst {
           case (d, g) if g.size.toString.length <= d => g
         }.get
-      groups.zipWithIndex.map { case (g, i) =>
+      val lines = groups.zipWithIndex.map { case (g, i) =>
         header(i, groups.size) + g.mkString(",") + "}}"
       }.toSeq
+      assert(lines.forall(_.length <= limit), s"per_query_part line over $limit chars")
+      lines
     }
   }
 

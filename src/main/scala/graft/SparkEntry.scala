@@ -330,19 +330,27 @@ object SparkEntry {
         |FROM (VALUES (1, 10), (1, 20), (2, 5), (3, 7)) t(k, v)
         |GROUP BY k ORDER BY k""".stripMargin
     },
-    // Window functions: gap-based sessionization over the event stream
-    // (30-min inactivity gap), a core UBA operation.
+    // Gap-based sessionization over the event stream (30-min inactivity
+    // gap), a core UBA operation, as ONE per-user aggregate: one shuffle
+    // on user_id and no window sort. As in the oracle's `lag` form, a
+    // session starts at the user's first event and at every gap > 1800 s
+    // between consecutive timestamps. Spark's ascending order puts NULL
+    // `ts` rows first, where each one's `lag` is NULL, so each opens a
+    // session of its own; `collect_list` drops NULLs, which are counted
+    // as n_events - size. Per-user memory: one long per non-NULL event of
+    // the user, sorted once after the shuffle — bounded by the user's
+    // event count, as in `Funnel.userStages`.
     query("q10_sessionize")((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       tbl(s, dir, "events")
-        .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-        .withColumn("new_sess",
-          when(col("prev_us").isNull ||
-            unix_micros(col("ts")) - col("prev_us") > 1800L * 1000000L, 1L)
-            .otherwise(0L))
         .groupBy(col("user_id"))
-        .agg(sum(col("new_sess")).as("n_sessions"), count(lit(1)).as("n_events"))
+        .agg(count(lit(1)).as("n_events"),
+          sort_array(collect_list(unix_micros(col("ts")))).as("_us"))
+        .select(col("user_id"),
+          (col("n_events") - size(col("_us")) +
+            size(filter(col("_us"), (t, i) =>
+              i === 0 || t - get(col("_us"), i - 1) > 1800L * 1000000L)))
+            .as("n_sessions"),
+          col("n_events"))
     }) {
       """SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_events
         |FROM (
@@ -549,20 +557,29 @@ object SparkEntry {
     },
     // Weekly cohort-retention matrix: users bucketed by signup week,
     // activity counted per week offset — the classic UBA cohort output.
-    // One shuffle on user_id (the signup agg and the activity join share
-    // the key), then a tiny (cohort, week) count-distinct aggregate.
+    // One scan and two shuffles: a per-user aggregate (on user_id) gives
+    // the signup time t0 and the set of active days, each user's distinct
+    // week offsets are exploded from that set, and a (cohort, week) count
+    // needs no distinct — the offsets are already distinct per user. The
+    // oracle's `ts >= t0` is applied per day: an event earlier on the
+    // signup day lands in week 0, which the signup row itself already
+    // gives the user. The `isNotNull` filters stand for the oracle's inner
+    // join. Per-user memory: one date per distinct active day of the user
+    // — bounded by the calendar span of the data, not its event count.
     query("q16_cohort_matrix")((s, dir) => {
-      val e = tbl(s, dir, "events")
-      val s0 = e.where(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t0"))
-      e.join(s0, "user_id").where(col("ts") >= col("t0"))
-        .select(col("user_id"),
+      val d0 = to_date(col("t0"))
+      tbl(s, dir, "events")
+        .groupBy(col("user_id"))
+        .agg(min(when(col("event_type") === "signup", col("ts"))).as("t0"),
+          collect_set(to_date(col("ts"))).as("_days"))
+        .where(col("user_id").isNotNull && col("t0").isNotNull)
+        .select(
           date_format(date_trunc("week", col("t0")), "yyyy-MM-dd").as("cohort_week"),
-          floor(datediff(to_date(col("ts")), to_date(col("t0"))).cast("double") / 7)
-            .as("week_off"))
+          explode(array_distinct(transform(filter(col("_days"), d => d >= d0),
+            d => floor(datediff(d, d0).cast("double") / 7)))).as("week_off"))
         .where(col("week_off") <= 8)
         .groupBy(col("cohort_week"), col("week_off"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
+        .agg(count(lit(1)).as("n_users"))
     }) {
       """WITH s0 AS (
         |  SELECT user_id, min(ts) AS t0 FROM events

@@ -93,9 +93,6 @@ object Similarity {
   def planeWeightsSeeded(seed: String, planes: Int, dim: Int): Seq[Seq[Long]] =
     (0 until planes).map(p => (0 until dim).map(d => hexHash60(s"$seed$p,$d") % 2001 - 1000))
 
-  def planeWeights(planes: Int, dim: Int): Seq[Seq[Long]] =
-    planeWeightsSeeded("", planes, dim)
-
   /** Sign-sketch bucket id of a *quantized* vector: bit p set iff
     * dot(v, plane_p) >= 0. Integer-exact. */
   def lshBucketSeeded(qvec: Column, seed: String, planes: Int, dim: Int = 64): Column = {

@@ -197,6 +197,17 @@ class BenchEmitSpec extends AnyFunSuite {
     }
   }
 
+  test("per_query_part rejects an entry too long for a line of its own") {
+    val name = "q1_" + "x" * 200
+    // the one-entry line under the default limit is the shortest line
+    // that can carry this entry
+    val line = Bench.perQueryPartLines(Seq(name -> 0.5), "sf0.1").head
+    assert(Bench.perQueryPartLines(Seq(name -> 0.5), "sf0.1", line.length) === Seq(line))
+    val e = intercept[IllegalArgumentException](
+      Bench.perQueryPartLines(Seq("a" -> 0.1, name -> 0.5), "sf0.1", line.length - 1))
+    assert(e.getMessage.contains(name), e.getMessage)
+  }
+
   test("prior-round isolated floors resolve by unique prefix") {
     // a1's ratcheted floor is the judge's 0.14 s isolated re-run, below
     // any rehearsal number — the floor only ever steps down

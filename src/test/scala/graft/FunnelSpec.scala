@@ -413,7 +413,7 @@ class FunnelSpec extends AnyFunSuite {
     }
     assert(conv.getDouble(1) === 135781.4662575)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_pct").toString
+    val dir = TempDirs("graft_pct").toString
     ev.write.parquet(s"$dir/events.parquet")
     val u21 = SparkEntry.queries("u21_funnel_latency")(spark, dir).head()
     check(u21.getAs[Double]("p50_01_sec"), d01, 0.5, "u21 p50_01")

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions for the headline queries — the
@@ -27,6 +30,41 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** Every node of an executed plan, through AQE wrappers and query
+    * stages; a reused exchange is not descended into. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+  }
+
+  test("dashboard queries run at their stage floor: shuffles, broadcasts, one events scan") {
+    // the seven queries of perfbench's uba_dashboard workload; AQE runs
+    // each query stage as a job of its own, so these counts fix its jobs
+    val shuffles = Seq("retention_count" -> 1, "retention_sum" -> 2,
+      "u1_funnel_stages" -> 1, "u2_funnel_report" -> 2, "u21_funnel_latency" -> 2,
+      "q10_sessionize" -> 1, "q16_cohort_matrix" -> 2)
+    shuffles.foreach { case (name, want) =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val ns = nodes(df.queryExecution.executedPlan)
+      val p = df.queryExecution.executedPlan.toString
+      assert(ns.count(_.isInstanceOf[ShuffleQueryStageExec]) == want,
+        s"$name: expected $want shuffle stages:\n$p")
+      assert(ns.count(_.isInstanceOf[BroadcastQueryStageExec]) == 0,
+        s"$name: expected no broadcast stage:\n$p")
+      val eventScans = ns.count {
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.getName == "events.parquet")
+        case _ => false
+      }
+      assert(eventScans == 1, s"$name: expected one events scan, got $eventScans:\n$p")
+      if (name == "q10_sessionize")
+        assert(!ns.exists(_.isInstanceOf[WindowExec]),
+          s"q10 must not sort the events for a window:\n$p")
+    }
+  }
 
   test("q1 pricing summary: partial+final hash aggregate, filter pushed to scan") {
     val p = plan("q1_pricing_summary")

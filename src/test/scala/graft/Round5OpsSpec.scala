@@ -262,7 +262,7 @@ class Round5OpsSpec extends AnyFunSuite {
     val ev = (1L to 7L).map(i => (i, 1L, "x", 0.0, s"2024-01-01 0$i:00:00", "{}"))
       .toDF("event_id", "user_id", "event_type", "value", "ts_s", "props")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val dir = java.nio.file.Files.createTempDirectory("graft_season").toString
+    val dir = TempDirs("graft_season").toString
     ev.write.parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("u31_seasonality")(spark, dir).collect().head
     assert(r.getString(0) === "x" && r.getLong(1) === 7L)

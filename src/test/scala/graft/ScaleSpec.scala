@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +14,7 @@ import graft.operators.{Dedup, GroupSample, Similarity, Skew, Split}
 class ScaleSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = TempDirs("graft_wh").toString
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("scale-spec")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,7 +25,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet sink: reads prune to the matching partition dirs") {
-    val out = Files.createTempDirectory("graft_sink").toString
+    val out = TempDirs("graft_sink").toString
     val docs = SparkEntry.tbl(spark, TestData.dir("0.001"), "documents")
     docs.repartition(col("lang"))
       .sortWithinPartitions(col("doc_id"))
@@ -48,7 +46,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("partition-dir layout round-trips the partition column value") {
-    val out = Files.createTempDirectory("graft_sink2").toString
+    val out = TempDirs("graft_sink2").toString
     val docs = SparkEntry.tbl(spark, TestData.dir("0.001"), "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     val back = spark.read.parquet(out)

@@ -47,7 +47,7 @@ class SourcesSpec extends AnyFunSuite {
     // the 100 TB layout for event logs is date-partitioned parquet; a
     // day filter must prune partition DIRECTORIES (never listed, never
     // read), not just push a data filter into surviving files
-    val dir = Files.createTempDirectory("graft_hivepart").toString
+    val dir = TempDirs("graft_hivepart").toString
     SparkEntry.tbl(spark, sf, "events")
       .withColumn("day", date_format(to_date(col("ts")), "yyyy-MM-dd"))
       .write.mode("overwrite").partitionBy("day").parquet(dir)
@@ -66,7 +66,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned CSV directory with explicit schema round-trips") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = TempDirs("graft_csv").toString
     val src = SparkEntry.tbl(spark, sf, "lineitem")
       .select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
     src.repartition(3).write.mode("overwrite").csv(dir)
@@ -106,7 +106,7 @@ class SourcesSpec extends AnyFunSuite {
   test("JSON and ORC sources round-trip with explicit schemas") {
     val src = SparkEntry.tbl(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-    val jsonDir = Files.createTempDirectory("graft_json").toString
+    val jsonDir = TempDirs("graft_json").toString
     src.repartition(2).write.mode("overwrite").json(jsonDir)
     val jsonBack = spark.read.schema(src.schema).json(jsonDir)
     assert(jsonBack.count() === src.count())
@@ -115,7 +115,7 @@ class SourcesSpec extends AnyFunSuite {
     def total(df: org.apache.spark.sql.DataFrame) =
       df.agg(sum(col("o_totalprice").cast("decimal(18,2)"))).head.getDecimal(0)
     assert(total(jsonBack) === total(src))
-    val orcDir = Files.createTempDirectory("graft_orc").toString
+    val orcDir = TempDirs("graft_orc").toString
     src.repartition(2).write.mode("overwrite").orc(orcDir)
     val orcBack = spark.read.orc(orcDir)
     assert(orcBack.count() === src.count())
@@ -131,7 +131,7 @@ class SourcesSpec extends AnyFunSuite {
       (2L, "unicode: café ✓ ß 日本語"),
       (3L, "ctl: end"),
       (4L, "")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_jsonl_gz").toString
+    val dir = TempDirs("graft_jsonl_gz").toString
     docs.repartition(2).write.mode("overwrite")
       .option("compression", "gzip").json(dir)
     val back = spark.read.schema("doc_id BIGINT, text STRING").json(dir)
@@ -155,7 +155,7 @@ class SourcesSpec extends AnyFunSuite {
     // relying on the shard layout for parallelism.
     val docs = SparkEntry.tbl(spark, TestData.dir("0.01"), "documents")
       .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("graft_jsonl_bz2").toString
+    val dir = TempDirs("graft_jsonl_bz2").toString
     docs.coalesce(1).write.mode("overwrite")
       .option("compression", "bzip2").json(dir)
     val shards = new java.io.File(dir).listFiles()
@@ -189,7 +189,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("bucketed tables: co-located join with no exchange, bucket pruning on point lookups") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_bucketed").toFile.getAbsolutePath
+    val dir = TempDirs("graft_bucketed").toFile.getAbsolutePath
     val left = (1 to 1000).map(i => (i.toLong, s"l$i")).toDF("id", "l")
     val right = (1 to 1000).map(i => (i.toLong, i * 2L)).toDF("id", "r")
     left.write.mode("overwrite").option("path", s"$dir/left")
@@ -249,7 +249,7 @@ class SourcesSpec extends AnyFunSuite {
       .select(col("n_nationkey").cast("long"), col("n_name"),
         col("n_regionkey").cast("long"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val dir = Files.createTempDirectory("graft_avro")
+    val dir = TempDirs("graft_avro")
     src.grouped((src.length + 1) / 2).zipWithIndex.foreach { case (rows, i) =>
       val w = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](avroSchema))
@@ -305,8 +305,8 @@ class SourcesSpec extends AnyFunSuite {
     // field simply absent
     val sC: Schema = SchemaBuilder.record("r").fields()
       .requiredLong("id").endRecord()
-    val d1 = Files.createTempDirectory("graft_avro_mp1")
-    val d2 = Files.createTempDirectory("graft_avro_mp2")
+    val d1 = TempDirs("graft_avro_mp1")
+    val d2 = TempDirs("graft_avro_mp2")
     write(d1.resolve("a.avro").toFile, sA,
       Seq(Map("id" -> 1L, "name" -> "x"), Map("id" -> 2L, "name" -> "y")))
     write(d2.resolve("b.avro").toFile, sA, Seq(Map("id" -> 3L, "name" -> "z")))
@@ -318,7 +318,7 @@ class SourcesSpec extends AnyFunSuite {
     // mixed-schema directory: schema is inferred from the FIRST file;
     // a later file with the same field at a different type (or missing
     // the field) must fail loudly at read, never yield silent nulls
-    val mixed = Files.createTempDirectory("graft_avro_mixed")
+    val mixed = TempDirs("graft_avro_mixed")
     write(mixed.resolve("0first.avro").toFile, sA, Seq(Map("id" -> 1L, "name" -> "x")))
     write(mixed.resolve("1badtype.avro").toFile, sB, Seq(Map("id" -> 2L, "name" -> 9.9)))
     def chainMsg(t: Throwable): String =
@@ -329,7 +329,7 @@ class SourcesSpec extends AnyFunSuite {
     }
     assert(chainMsg(e1).contains("field 'name'"),
       s"mixed-type read must name the offending field: ${chainMsg(e1)}")
-    val missing = Files.createTempDirectory("graft_avro_missing")
+    val missing = TempDirs("graft_avro_missing")
     write(missing.resolve("0first.avro").toFile, sA, Seq(Map("id" -> 1L, "name" -> "x")))
     write(missing.resolve("1nofield.avro").toFile, sC, Seq(Map("id" -> 2L)))
     val e2 = intercept[Exception] {
@@ -340,7 +340,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("csv source: PERMISSIVE captures malformed rows, DROPMALFORMED removes them") {
-    val dir = Files.createTempDirectory("graft_badcsv").toString
+    val dir = TempDirs("graft_badcsv").toString
     Files.writeString(java.nio.file.Paths.get(dir, "part.csv"),
       "1,alpha\n2,beta\nnot_a_number,gamma\n3,delta\n")
     val dataSchema = StructType(Seq(
@@ -392,7 +392,7 @@ class SourcesSpec extends AnyFunSuite {
     // fs.<scheme>.impl conf, not the default local scheme
     import graft.sources.StubObjectFileSystem
     StubObjectFileSystem.register(spark)
-    val dir = Files.createTempDirectory("graft_stub_store").toString
+    val dir = TempDirs("graft_stub_store").toString
     val url = StubObjectFileSystem.url(s"$dir/orders")
     val src = SparkEntry.tbl(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -413,7 +413,7 @@ class SourcesSpec extends AnyFunSuite {
     import spark.implicits._
     // generation v1 writes (id, a); v2 adds a column (id, a, b) — the
     // additive-column evolution every long-lived dataset goes through
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = TempDirs("graft_evolve").toString
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")
       .write.parquet(s"$dir/gen=1")
     Seq((3L, "z", 30L)).toDF("id", "a", "b")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,7 +28,7 @@ class StreamingSpec extends AnyFunSuite {
   /** events.parquet with ts converted to a real timestamp, staged into a
     * fresh dir so readStream can treat it as a file source. */
   private lazy val stagedDir: String = {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = TempDirs("graft_stream").toString
     SparkEntry.tbl(spark, TestData.dir("0.001"), "events")
       .write.mode("overwrite").parquet(dir)
     dir

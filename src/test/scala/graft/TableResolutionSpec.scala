@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graft.ListenerBridge
@@ -64,7 +63,7 @@ class TableResolutionSpec extends AnyFunSuite {
       case "ntz" => col("ts_s").cast("timestamp_ntz")
       case "ltz" => col("ts_s").cast("timestamp")
     }
-    val dir = Files.createTempDirectory(s"graft_tbl_$tsType").toString
+    val dir = TempDirs(s"graft_tbl_$tsType").toString
     base.withColumn("ts", ts).drop("ts_s").write.parquet(s"$dir/events.parquet")
     dir
   }
@@ -125,7 +124,7 @@ class TableResolutionSpec extends AnyFunSuite {
 
   test("a directory table still lists files added after the first read") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_tbl_dir").toString
+    val dir = TempDirs("graft_tbl_dir").toString
     val path = s"$dir/documents.parquet"
     (1L to 6L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
       .repartition(3).write.parquet(path)
