@@ -359,7 +359,7 @@ object SparkEntry {
         |         THEN 1 ELSE 0 END AS new_sess
         |  FROM (
         |    SELECT user_id, ts,
-        |      lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+        |      lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id) AS prev_us
         |    FROM events))
         |GROUP BY user_id""".stripMargin
     },
@@ -6935,7 +6935,7 @@ object SparkEntry {
     },
     // Perceptual near-dup FAMILIES — the media twin of d10's
     // pairs→components→keeper pipeline: m9's Hamming-banded pairs
-    // clustered by min-label connected components, every fixture image
+    // clustered by connected components, every fixture image
     // labeled with its family id (singletons are their own family)
     // plus the min-id keeper flag — the table a media curation run
     // publishes ("these N files are M distinct images; keep these").
@@ -6956,7 +6956,7 @@ object SparkEntry {
     }) {
       // A recursive closure over the Hamming-≤3 edges; the component
       // minimum is the family id (the algorithm-independent result
-      // min-label propagation converges to).
+      // connected components converge to).
       s"""WITH RECURSIVE $phashChainSql, pf AS (
          |  SELECT id_a, id_b FROM prs WHERE hamming <= 3
          |), ${ccClosureSql("pf")}, lbl AS (
@@ -6967,8 +6967,8 @@ object SparkEntry {
          |FROM keys LEFT JOIN lbl l ON keys.k = l.id""".stripMargin
     },
     // m10's families pipeline over the 256-bit deep bands — the full
-    // web-scale media-curation release path (deep pairs → min-label
-    // CC → keeper): same composition, same scale shape (CC rounds
+    // web-scale media-curation release path (deep pairs → CC →
+    // keeper): same composition, same scale shape (CC rounds
     // shuffle only the pair frontier), candidate stage now the
     // flat-occupancy 2³² band space.
     query("m12_perceptual_families_deep")((s, dir) => {

@@ -19,7 +19,7 @@ import graft.functions.Text
   * for the winning pair, and one per-row literal `replace` applying the
   * merge. Nothing corpus-sized is ever collected; the only driver-side
   * value per round is the single winning pair (the same role as the
-  * convergence flag in [[Dedup.connectedComponents]]).
+  * observed edge fingerprint in [[Dedup.connectedComponents]]).
   *
   * Determinism: winner = max count, ties broken by (left, right)
   * lexicographically — ASCII-only symbols, so Spark's UTF8 ordering and

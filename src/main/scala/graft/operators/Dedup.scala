@@ -1253,181 +1253,92 @@ object Dedup {
     * component's minimum id as `group_id`, so `doc_id = group_id` selects
     * one keeper per group.
     *
-    * Algorithm: iterative min-label propagation. Each round every node
-    * takes the min of its own label and its neighbors' labels — one
-    * equi-join + one aggregation, both shuffles on the node id, per
-    * round; rounds needed = the graph diameter. Near-dup graphs are
-    * star/clique-like (diameter 2-4 even for huge corpora), so the round
-    * count stays small where a path-graph worst case would not; for
-    * adversarial diameters switch to large-star/small-star (Kiveris et
-    * al.), which squares paths down in O(log n) rounds at the cost of a
-    * more complex update. Labels are eagerly materialized per round
-    * (same rationale as the checkpoint in [[minhashLshPairs]]) and
-    * convergence is detected by counting changed labels.
+    * Algorithm: alternating large-star / small-star (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014) over
+    * canonical `lo <= hi` edges. Each round is two steps of one
+    * neighborhood-min window each, both shuffles on the node id, plus
+    * the distinct of the round's output:
+    *   - large-star: every node u hooks each larger neighbor v onto
+    *     m = min(Γ(u) ∪ u), emitting (v, m);
+    *   - small-star: every node u, keyed as the larger endpoint, points
+    *     itself and each smaller neighbor v ≠ m at the minimum m of its
+    *     smaller neighborhood, emitting (v, m).
+    * Both steps preserve connectivity; at the fixed point the edge set is
+    * the star forest {(component min, v)}. A self-loop (x, x) stays an
+    * edge, so a node seen only in self-loops keeps a row. The round's
+    * edge fingerprint (edge count and decimal sum of `xxhash64`) is
+    * observed on the checkpoint that materialises the round
+    * ([[Observed.checkpoint]]), so detecting the fixed point runs no job
+    * of its own.
     *
-    * Output: (doc_id, group_id) for every node appearing in `pairs`;
-    * documents without any near-dup pair are their own singleton group —
-    * left-join this result and coalesce to the document's own id. No
-    * NULL id is ever output: a `(NULL, x)` pair canonicalizes to the
-    * self-loop `(x, x)`, so `x` gets a row and the NULL id none, and a
+    * Why this algorithm: its rounds grow with log n, not with the
+    * diameter or the id order. On shuffled-id paths it needs 7 rounds at
+    * 128 nodes and 9-10 at 1,024 (counting the round that confirms the
+    * fixed point), where the min-label propagation with pointer jump it
+    * replaced needed 58-84 and 352-373 rounds (three shuffles each, exact
+    * simulations of both update rules); sorted paths need 8 and 11 either
+    * way. On curation's near-dup pairs it runs 6-10 jobs per call, where
+    * min-label ran 22.
+    *
+    * Output: (doc_id, group_id) for every non-NULL id appearing in
+    * `pairs`; documents without any near-dup pair are their own singleton
+    * group — left-join this result and coalesce to the document's own id.
+    * No NULL id is ever output: a `(NULL, x)` pair becomes the self-loop
+    * `(x, x)`, so `x` gets a row and the NULL id none, and a
     * `(NULL, NULL)` pair is dropped.
     *
-    * Throws `IllegalStateException` when the labels have not converged
-    * after `maxIter` rounds, instead of returning wrong labels. */
+    * Throws `IllegalStateException` when the edges have not reached the
+    * fixed point after `maxIter` rounds, instead of returning wrong
+    * labels. */
   def connectedComponents(
       pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxIter: Int = 25): DataFrame = {
-    // canonicalize BEFORE doubling (round 14, §2.3): the distinct then
-    // exchanges |pairs| rows instead of the doubled table. Two strictly
-    // lo<hi orientations cannot collide, so the doubled set stays
-    // distinct by construction; a self-loop row is kept exactly once
-    // (the old double-then-distinct behavior) by excluding it from the
-    // reversed side. least/greatest skip a NULL id, so only a
-    // (NULL, NULL) pair leaves a NULL src, and it is dropped.
-    val canon = pairs
-      .select(least(col(idA), col(idB)).as("src"),
-        greatest(col(idA), col(idB)).as("dst"))
-      .where(col("src").isNotNull)
-      .distinct()
-    // static per-iteration join side, materialized once
-    val edges = canon.unionByName(canon.where(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("src"), col("lbl").as("slbl")), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("slbl")).as("nlbl"))
-      // carry the changed flag inside the round's checkpointed output:
-      // convergence is then a scan of materialized blocks, not an extra
-      // old-vs-new join (+shuffle) per round — measured ~40% of round cost
-      //
-      // POINTER JUMP (round 14, guide §1.2 — fewer passes): after the
-      // neighbor-min half-step, each node also adopts the PREVIOUS
-      // round's label of its new label (lbl ← min(l1, prev(l1))) — the
-      // hash-to-min contraction, turning diameter-many rounds into
-      // ~log(diameter). Every label stays the id of a component member
-      // and only ever decreases, so an unchanged round still implies
-      // neighbor-min stability and therefore labels == component min —
-      // the FIXPOINT (the declared result) is identical, only the
-      // trajectory shortens. The jump joins against the previous
-      // round's materialized blocks, so it adds one cheap join per
-      // round and removes whole rounds (measured 5 → 4 on the d6
-      // corpus).
-      val half = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("lbl"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("_l1"))
-      val next = half
-        .join(labels.select(col("id").as("_l1"), col("lbl").as("_pl")),
-          Seq("_l1"), "left")
-        .select(col("id"),
-          least(col("_l1"), coalesce(col("_pl"), col("_l1"))).as("lbl"),
-          (least(col("_l1"), coalesce(col("_pl"), col("_l1"))) < col("lbl"))
-            .as("_changed"))
-        .localCheckpoint()
-      // isEmpty, not count: take(1) over checkpointed blocks is
-      // exchange-free (one job on every non-converged round; its 1→4→…
-      // partition expansion only costs extra jobs on the single
-      // converged round), while a count() plans a partial-agg exchange
-      // + an AQE stage job EVERY round — measured +5 jobs per query
-      // when tried in round 14
-      converged = next.where(col("_changed")).isEmpty
-      labels = next.drop("_changed")
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
-    labels.select(col("id").as("doc_id"), col("lbl").as("group_id"))
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — the adversarial-diameter upgrade over
-    * [[connectedComponents]]: min-label propagation needs
-    * diameter-many rounds (a path graph of n nodes takes n-1), while
-    * star alternation contracts paths in O(log n) rounds by rewiring
-    * edges instead of just forwarding labels.
-    *
-    * Per round, two steps of one groupBy + one self-key join each (all
-    * shuffles on the node id):
-    *   - large-star: every node u hooks each LARGER neighbor v onto
-    *     m = min(Γ(u) ∪ u) — emits (v, m) for v > u;
-    *   - small-star: every node u (now keyed as the larger endpoint)
-    *     re-points each smaller neighbor, and itself, at the minimum of
-    *     its smaller neighborhood — emits (v, m) for v ∈ Γ⁻(u) ∪ {u},
-    *     v ≠ m.
-    * Both steps preserve connectivity; at the fixed point the edge set
-    * is exactly the star forest {(component min, v)}. Convergence is
-    * detected from the round's eagerly-materialized output with a tiny
-    * (count, order-independent checksum) aggregate — no old-vs-new join.
-    *
-    * Output contract identical to [[connectedComponents]]:
-    * (doc_id, group_id) for every node in `pairs`, group_id = the
-    * component's minimum id. Prefer this variant when the pair graph's
-    * diameter is not known to be small; near-dup graphs from the LSH
-    * operators are star/clique-like, where [[connectedComponents]]'s
-    * cheaper rounds win. */
-  def connectedComponentsStar(
-      pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIter: Int = 30): DataFrame =
-    connectedComponentsStarRounds(pairs, idA, idB, maxIter)._1
-
-  /** [[connectedComponentsStar]] plus the number of large+small rounds
-    * it ran — the observable for the O(log n) convergence contract. */
-  def connectedComponentsStarRounds(
-      pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIter: Int = 30): (DataFrame, Int) = {
+    // least/greatest skip a NULL id, so only a (NULL, NULL) pair leaves
+    // a NULL _lo
     def canon(df: DataFrame): DataFrame =
       df.select(least(col("_a"), col("_b")).as("_lo"),
           greatest(col("_a"), col("_b")).as("_hi"))
-        .where(col("_lo") =!= col("_hi")).distinct()
-    def fingerprint(edges: DataFrame): (Long, String) = {
+        .where(col("_lo").isNotNull).distinct()
+    def checkpoint(df: DataFrame): (DataFrame, Seq[Any]) = {
       // decimal sum: order-independent and ANSI-overflow-free
-      val r = edges.agg(count(lit(1)),
-        sum(xxhash64(col("_lo"), col("_hi")).cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toPlainString)
+      val (cp, m) = Observed.checkpoint(df,
+        sum(xxhash64(col("_lo"), col("_hi")).cast("decimal(38,0)")).as("fp"))
+      (cp, Seq(m("rows"), m.getOrElse("fp", null)))
     }
-    var edges = canon(pairs.select(col(idA).as("_a"), col(idB).as("_b")))
-      .localCheckpoint()
-    var fp = fingerprint(edges)
+    var (edges, fp) =
+      checkpoint(canon(pairs.select(col(idA).as("_a"), col(idB).as("_b"))))
     var rounds = 0
-    var converged = false
+    var converged = fp.head == 0L
     while (!converged && rounds < maxIter) {
-      // large-star: adjacency in both directions, keyed on u
+      // large-star: adjacency in both directions, keyed on u; emits
+      // (v, m) as (_x, _y), keyed on its larger endpoint for small-star
       val adj = edges.select(col("_lo").as("_x"), col("_hi").as("_y"))
         .unionByName(edges.select(col("_hi").as("_x"), col("_lo").as("_y")))
-      val mins = adj.groupBy(col("_x")).agg(min(col("_y")).as("_mn"))
-      val large = canon(adj.join(mins, "_x")
-        .where(col("_y") > col("_x"))
-        .select(col("_y").as("_a"), least(col("_mn"), col("_x")).as("_b")))
-      // small-star: edges keyed on their larger endpoint; smaller
-      // neighborhood min is the new hub for the smaller neighbors + self
-      val adj2 = large.select(col("_hi").as("_x"), col("_lo").as("_y"))
-      val mins2 = adj2.groupBy(col("_x")).agg(min(col("_y")).as("_mn"))
-      val small = canon(
-        adj2.join(mins2, "_x")
-          .where(col("_y") =!= col("_mn"))
+      val large = adj.withColumn("_mn", min(col("_y")).over(Window.partitionBy(col("_x"))))
+        .where(col("_y") >= col("_x"))
+        .select(col("_y").as("_x"), least(col("_mn"), col("_x")).as("_y"))
+      // small-star: the smaller neighborhood's min is the new hub for
+      // the smaller neighbors + self
+      val byHi = large.withColumn("_mn", min(col("_y")).over(Window.partitionBy(col("_x"))))
+      val (small, fpNext) = checkpoint(canon(
+        byHi.where(col("_y") =!= col("_mn"))
           .select(col("_y").as("_a"), col("_mn").as("_b"))
-          .unionByName(mins2.select(col("_x").as("_a"), col("_mn").as("_b"))))
-        .localCheckpoint()
-      val fpNext = fingerprint(small)
+          .unionByName(byHi.select(col("_x").as("_a"), col("_mn").as("_b")))))
       converged = fpNext == fp
       fp = fpNext
       edges = small
       rounds += 1
     }
-    val labels = edges.select(col("_hi").as("doc_id"), col("_lo").as("group_id"))
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds")
+    edges.select(col("_hi").as("doc_id"), col("_lo").as("group_id"))
       .unionByName(edges.select(col("_lo").as("doc_id"), col("_lo").as("group_id")))
       .distinct()
-    (labels, rounds)
   }
 
   /** Reduces a corpus to its near-dup survivors: given component labels
-    * from [[connectedComponents]] / [[connectedComponentsStar]], drops
+    * from [[connectedComponents]], drops
     * every document that is a non-canonical member of its component
     * (id ≠ the component's min id). Documents that never appeared in a
     * pair have no label row and survive by construction — no left-join

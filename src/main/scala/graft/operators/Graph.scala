@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge tables — the family the
-  * connected-components operators ([[Dedup.connectedComponents]] /
-  * `connectedComponentsStar`) belong to, here for value propagation
-  * rather than label collapse.
+  * connected-components operator ([[Dedup.connectedComponents]]) belongs
+  * to, here for value propagation rather than label collapse.
   *
   * Cross-engine determinism: ranks are integer parts-per-million and
   * every step is exact integer arithmetic (floor division via `div`),
@@ -266,31 +265,30 @@ object Graph {
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("_u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("_v"))
-      .where(col("_u") =!= col("_v"))
-      .distinct()
-      .localCheckpoint()
     // early exit at the fixpoint: peeling only REMOVES edges, so an
     // unchanged edge count means an unchanged edge set and every later
     // round is a no-op — the result at `rounds` is IDENTICAL, the
-    // remaining rounds' 3 exchanges each are just skipped. The count
-    // rides the already-materialized checkpoint blocks.
-    var prev = e.count()
+    // remaining rounds' 3 exchanges each are just skipped. The count is
+    // observed on the round's own checkpoint.
+    var (e, m) = Observed.checkpoint(edges
+      .select(least(col(srcCol), col(dstCol)).cast("long").as("_u"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("_v"))
+      .where(col("_u") =!= col("_v"))
+      .distinct())
+    var prev = m("rows")
     var r = 0
-    var fixed = prev == 0
+    var fixed = prev == 0L
     while (r < rounds && !fixed) {
       val keep = e.select(col("_u").as("_n")).union(e.select(col("_v").as("_n")))
         .groupBy(col("_n")).agg(count(lit(1)).as("_d"))
         .where(col("_d") >= k)
         .select(col("_n"))
-      e = e.join(keep.select(col("_n").as("_u")), Seq("_u"), "left_semi")
-        .join(keep.select(col("_n").as("_v")), Seq("_v"), "left_semi")
-        .localCheckpoint()
-      val c = e.count()
-      fixed = c == prev
-      prev = c
+      val (next, mNext) = Observed.checkpoint(
+        e.join(keep.select(col("_n").as("_u")), Seq("_u"), "left_semi")
+          .join(keep.select(col("_n").as("_v")), Seq("_v"), "left_semi"))
+      e = next
+      fixed = mNext("rows") == prev
+      prev = mNext("rows")
       r += 1
     }
     e.select(col("_u").as("_n")).union(e.select(col("_v").as("_n")))
@@ -398,28 +396,27 @@ object Graph {
     val nb = und.select(col("_u").as("_n"), col("_v").as("_nbr"))
       .union(und.select(col("_v").as("_n"), col("_u").as("_nbr")))
       .localCheckpoint()
-    var dist = nb.select(col("_n").as("_src")).distinct()
-      .select(col("_src"), col("_src").as("_node"), lit(0L).as("_h"))
-      .localCheckpoint()
     // early exit at the fixpoint: BFS only ADDS pairs (a pair's _h is
     // its discovery round and never changes), so an unchanged pair
     // count means the reachability closure is complete and every later
     // round recomputes the same table — the truncated-harmonic result
     // at `rounds` is IDENTICAL, the remaining rounds' join + min-dedup
-    // exchanges are skipped. Count rides the checkpoint blocks.
-    var prev = dist.count()
+    // exchanges are skipped. The count is observed on the round's own
+    // checkpoint.
+    var (dist, m) = Observed.checkpoint(nb.select(col("_n").as("_src")).distinct()
+      .select(col("_src"), col("_src").as("_node"), lit(0L).as("_h")))
+    var prev = m("rows")
     var r = 0
     var fixed = false
     while (r < rounds && !fixed) {
       val next = dist
         .join(nb.select(col("_n").as("_node"), col("_nbr")), Seq("_node"))
         .select(col("_src"), col("_nbr").as("_node"), (col("_h") + 1).as("_h"))
-      dist = dist.unionByName(next)
-        .groupBy(col("_src"), col("_node")).agg(min(col("_h")).as("_h"))
-        .localCheckpoint()
-      val c = dist.count()
-      fixed = c == prev
-      prev = c
+      val (cp, mNext) = Observed.checkpoint(dist.unionByName(next)
+        .groupBy(col("_src"), col("_node")).agg(min(col("_h")).as("_h")))
+      dist = cp
+      fixed = mNext("rows") == prev
+      prev = mNext("rows")
       r += 1
     }
     dist.where(col("_node") =!= col("_src"))

@@ -309,46 +309,70 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val r = Dedup.connectedComponents(pairs).collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    val rs = Dedup.connectedComponentsStar(pairs).collect()
-      .map(x => x.getLong(0) -> x.getLong(1)).toMap
+    // pair orientation does not matter
+    val rs = Dedup.connectedComponents(
+        pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(rs === r)
   }
 
-  test("large-star/small-star collapses a path graph in O(log n) rounds") {
-    import spark.implicits._
-    // the adversarial diameter for min-label propagation: a path of n
-    // nodes needs n-1 label-forwarding rounds, but star alternation
-    // contracts it logarithmically. n=128: min-label would need 127
-    // rounds; the star variant must land within ceil(log2 128) + 4 = 11.
-    val n = 128
-    val path = (1 until n).map(i => (i.toLong, i.toLong + 1)).toDF("id_a", "id_b")
-    val (labels, rounds) = Dedup.connectedComponentsStarRounds(path)
-    val got = labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(got === (1 to n).map(i => i.toLong -> 1L).toMap)
-    val bound = math.ceil(math.log(n.toDouble) / math.log(2.0)).toInt + 4
-    assert(rounds <= bound, s"star CC took $rounds rounds on a $n-path (bound $bound)")
+  /** Component minimum of every node in `pairs`, by driver-side
+    * union-find: the reference the CC specs check against. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
   }
 
-  test("star CC agrees with min-label CC on random graphs") {
+  /** `connectedComponents` as a map, after checking no node got two rows. */
+  private def components(pairs: Seq[(Long, Long)], maxIter: Int = 25): Map[Long, Long] = {
     import spark.implicits._
+    val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), maxIter = maxIter)
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(got.length === got.toMap.size, "a node got two rows")
+    got.toMap
+  }
+
+  private def log2Bound(n: Int): Int =
+    math.ceil(math.log(n.toDouble) / math.log(2.0)).toInt + 4
+
+  test("large-star/small-star collapses a path graph in O(log n) rounds") {
+    // the adversarial diameter for label forwarding: a path of n nodes
+    // needs n-1 forwarding rounds, but star alternation contracts it
+    // logarithmically. n=128: the fixed point must be reached within
+    // ceil(log2 128) + 4 = 11 rounds, or the call throws at its cap.
+    val n = 128
+    val path = (1 until n).map(i => (i.toLong, i.toLong + 1))
+    assert(components(path, maxIter = log2Bound(n)) ===
+      (1 to n).map(i => i.toLong -> 1L).toMap)
+  }
+
+  test("connected components match union-find on random graphs with self-loops") {
     for (seed <- Seq(3, 11)) {
       val rnd = new scala.util.Random(seed)
       val nNodes = 40 + rnd.nextInt(30)
-      val pairs = (0 until nNodes).flatMap { _ =>
+      // a == b keeps the self-loop, and each node must still get a row:
+      // one self-loop on a drawn node, one on a node seen nowhere else
+      val drawn = (0 until nNodes).map { _ =>
         val a = rnd.nextInt(nNodes).toLong
         val b = rnd.nextInt(nNodes).toLong
-        if (a == b) None else Some((math.min(a, b), math.max(a, b)))
-      }.toDF("id_a", "id_b")
-      val minLabel = Dedup.connectedComponents(pairs).collect()
-        .map(x => x.getLong(0) -> x.getLong(1)).toMap
-      val star = Dedup.connectedComponentsStar(pairs).collect()
-        .map(x => x.getLong(0) -> x.getLong(1)).toMap
-      assert(star === minLabel, s"seed=$seed")
+        (math.min(a, b), math.max(a, b))
+      }
+      val pairs = drawn ++ Seq((drawn.head._2, drawn.head._2), (nNodes + 1L, nNodes + 1L))
+      val got = components(pairs)
+      assert(got === unionFind(pairs), s"seed=$seed")
+      assert(got(nNodes + 1L) === nNodes + 1L, s"seed=$seed")
     }
   }
 
   test("connected components agree with union-find on random graphs") {
-    import spark.implicits._
     // seeded random graphs, checked against a driver-side union-find —
     // guards the iterative propagation against convergence/merge bugs the
     // hand-picked chain cases can't reach
@@ -360,20 +384,70 @@ class DedupSimilaritySpec extends AnyFunSuite {
         val b = rnd.nextInt(nNodes).toLong
         if (a < b) (a, b) else (b, a + 1)
       }.filter(p => p._1 != p._2)
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = parent.keys.map(x => x -> find(x)).toMap
-      val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === expected, s"seed $seed: component mismatch")
+      assert(components(pairs) === unionFind(pairs), s"seed $seed: component mismatch")
     }
+  }
+
+  test("hostile CC: shuffled-id paths of 128 and 1,024 nodes converge within ceil(log2 n) + 4 rounds") {
+    for ((n, seed) <- Seq((128, 1), (128, 2), (1024, 3))) {
+      val ids = new scala.util.Random(seed).shuffle((0 until n).map(_.toLong * 7 + 3))
+      val path = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+      assert(components(path, maxIter = log2Bound(n)) === unionFind(path), s"n=$n seed=$seed")
+    }
+  }
+
+  test("hostile CC: a sorted path, a 1 x 2,000 hub star and two cliques joined by one edge") {
+    val sorted = (1L until 300L).map(i => (i, i + 1))
+    assert(components(sorted, maxIter = log2Bound(300)) === unionFind(sorted))
+    // the hub's id sits mid-range, so half its leaves are smaller than it
+    val hub = (0L to 2000L).filter(_ != 1000L).map(leaf => (1000L, leaf))
+    assert(components(hub) === unionFind(hub))
+    val cliques = (for (a <- 0L until 12L; b <- a + 1 until 12L)
+      yield Seq((a, b), (a + 100, b + 100))).flatten :+ ((11L, 105L))
+    val got = components(cliques)
+    assert(got === unionFind(cliques))
+    assert(got.values.toSet === Set(0L))
+  }
+
+  test("hostile CC: duplicate and reversed pairs, self-loops, (NULL, x) and (NULL, NULL)") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(5L), Some(3L)), (Some(3L), Some(5L)), (Some(3L), Some(5L)), // one edge
+      (Some(9L), Some(5L)),
+      (Some(20L), Some(20L)), (Some(20L), Some(20L)), // self-loop only
+      (Some(21L), Some(21L)), (Some(22L), Some(21L)), // self-loop plus an edge
+      (None, Some(30L)), (Some(31L), None), (None, Some(31L)), // NULL partners only
+      (None, Some(3L)), // NULL partner of a connected node
+      (None, None))
+      .toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(pairs).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1))))
+    assert(got.length === got.toSet.size)
+    assert(got.toSet === Set(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 21L,
+      22L -> 21L, 30L -> 30L, 31L -> 31L).map { case (d, g) => (Some(d), Some(g)) })
+  }
+
+  test("hostile CC: empty pairs give no rows, typed like a non-empty result") {
+    import spark.implicits._
+    val got = Dedup.connectedComponents(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assert(got.collect().isEmpty)
+    assert(got.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("doc_id" -> "bigint", "group_id" -> "bigint"))
+    val none = Seq[(Option[Long], Option[Long])]((None, None)).toDF("id_a", "id_b")
+    assert(Dedup.connectedComponents(none).collect().isEmpty)
+  }
+
+  test("connected components run a pinned number of Spark jobs on a fixed fixture") {
+    import spark.implicits._
+    // a 3-chain and a pair: the initial checkpoint (2 jobs), one
+    // rewiring round and the round that sees the fingerprint repeat (4
+    // each: two window shuffles, the distinct, the checkpoint), then the
+    // labels' distinct and collect (2). Job counts do not drift with the
+    // host, so a probe job added to the loop shows here.
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    val (rows, jobs) = JobCount.jobsOf(spark)(Dedup.connectedComponents(pairs).collect())
+    assert(rows.length === 5)
+    assert(jobs === 12, s"connectedComponents ran $jobs jobs")
   }
 
   test("connected components converge on a long path graph") {

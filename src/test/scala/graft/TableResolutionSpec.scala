@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -14,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * as an uncached read in each `events.ts` branch, a fresh inference for a
   * new session or a changed inference conf, and fresh file listing. */
 class TableResolutionSpec extends AnyFunSuite {
+  import JobCount.jobsOf
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -25,28 +22,6 @@ class TableResolutionSpec extends AnyFunSuite {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
-  }
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsOf[T](s: SparkSession)(body: => T): (T, Int) = {
-    val sc = s.sparkContext
-    val group = s"table-resolution-${java.util.UUID.randomUUID}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "table resolution")
-    try {
-      val r = body
-      ListenerBridge.drain(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
   }
 
   /** A temp dir holding `events.parquet` with `ts` as `tsType`: LONG
