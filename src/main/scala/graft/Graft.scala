@@ -29,6 +29,8 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerAll(spark)

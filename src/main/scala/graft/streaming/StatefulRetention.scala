@@ -34,10 +34,12 @@ case class RetentionStats(user_id: Long, stats: Seq[Seq[Long]])
   * Every bit only moves up that rank, so emissions converge to the batch
   * answer regardless of event arrival order.
   *
-  * State is bounded: `2 × (winDays+1)` bytes per user. At 100 TB scale,
-  * add `GroupStateTimeout.EventTimeTimeout` + a watermark to evict users
-  * once the analysis window has closed; kept `NoTimeout` here because the
-  * fixed-window analysis reads a bounded historical range.
+  * State is bounded: `2 × (winDays+1)` bytes per user, and
+  * [[perUserStatsEvicting]] drops it once the analysis window has
+  * closed. Its event-time timeout has a cost per batch: whenever a batch
+  * advances the watermark, Spark runs one more micro-batch without data
+  * to fire timeouts, so a steady stream pays two batches (and two
+  * checkpoint commits) per input batch.
   */
 object StatefulRetention {
 

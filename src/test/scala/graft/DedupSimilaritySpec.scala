@@ -153,7 +153,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val banded = key(Dedup.embeddingNearDupPairs(aug))
-    val brute = key(Dedup.embeddingNearDupPairsBrute(aug))
+    val brute = key(DedupReference.embeddingNearDupPairsBrute(aug))
     assert(banded === brute)
     assert(banded.nonEmpty)
   }
@@ -177,7 +177,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       val miss = math.pow(1.0 - math.pow(agree, planes), bands.toDouble)
       assert(miss <= 1e-3, s"t=$t grid=($bands,$planes) analytic miss $miss")
       val banded = key(Dedup.embeddingNearDupPairsAuto(aug, threshold = t))
-      val brute = key(Dedup.embeddingNearDupPairsBrute(aug, threshold = t))
+      val brute = key(DedupReference.embeddingNearDupPairsBrute(aug, threshold = t))
       assert(banded === brute, s"t=$t grid=($bands,$planes)")
       assert(brute.nonEmpty)
     }

@@ -369,7 +369,7 @@ class Round11OpsSpec extends AnyFunSuite {
 
   test("embeddingNearDupPairsAuto routes to trained cells past the corpus bound") {
     val aug = augSmall
-    val brute = pairKey(Dedup.embeddingNearDupPairsBrute(aug, threshold = 0.95))
+    val brute = pairKey(DedupReference.embeddingNearDupPairsBrute(aug, threshold = 0.95))
     // below the bound: the banded grid with its recall certificate
     val banded = pairKey(Dedup.embeddingNearDupPairsAuto(aug, threshold = 0.95))
     assert(banded === brute)
@@ -402,7 +402,7 @@ class Round11OpsSpec extends AnyFunSuite {
       (id, v.toSeq)
     }
     val df = rows.toDF("vec_id", "embedding")
-    val brute = pairKey(Dedup.embeddingNearDupPairsBrute(df, threshold = 0.95))
+    val brute = pairKey(DedupReference.embeddingNearDupPairsBrute(df, threshold = 0.95))
     val trained = pairKey(Dedup.embeddingNearDupPairsTrained(df,
       threshold = 0.95, targetCellSize = 16))
     assert(trained === brute)

@@ -20,6 +20,9 @@ class StreamingSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the checkpoint manager Graft.localSession installs
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
